@@ -69,24 +69,46 @@ VIDEO_MOD = 20
 HTML_MOD = 10
 
 
-# view-registration memo: (applicationId -> sf_dir). Registering the
-# same directory twice is pure metadata work (10 parquet schema reads +
-# py4j round-trips, ~0.7 s measured — 8x the cost of a small query
-# itself), so repeat calls for the SAME session+dir are skipped. This
-# caches no data and no results: every query still scans the parquet
-# files. A different sf_dir (or a fresh session) re-registers.
-_REGISTERED_VIEWS: dict[str, str] = {}
+# view-registration memo: (applicationId -> (sf_dir, fingerprint)).
+# Registering the same directory twice is pure metadata work (10 parquet
+# schema reads + py4j round-trips, ~0.7 s measured — 8x the cost of a
+# small query itself), so repeat calls for the SAME session+dir are
+# skipped. This caches no data and no results, but a view pins the file
+# listing it was created with, so the key carries a fingerprint of the
+# table files: a rewritten table (or a different sf_dir, or a fresh
+# session) re-registers.
+_REGISTERED_VIEWS: dict[str, tuple[str, tuple]] = {}
+
+
+def _tables_fingerprint(sf_dir: str) -> tuple:
+    """(path, size, mtime) of every table path and the files directly
+    inside it; file names are part of it, so a rewrite changes it even
+    within the filesystem's timestamp granularity."""
+    stamps = []
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            entries = [e.path for e in os.scandir(path)]
+        elif os.path.exists(path):
+            entries = [path]
+        else:
+            continue
+        for e in sorted(entries):
+            st = os.stat(e)
+            stamps.append((e, st.st_size, st.st_mtime_ns))
+    return tuple(stamps)
 
 
 def _register_views(spark: SparkSession, sf_dir: str) -> None:
     app_id = spark.sparkContext.applicationId
-    if _REGISTERED_VIEWS.get(app_id) == sf_dir:
+    key = (sf_dir, _tables_fingerprint(sf_dir))
+    if _REGISTERED_VIEWS.get(app_id) == key:
         return
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
             spark.read.parquet(path).createOrReplaceTempView(t)
-    _REGISTERED_VIEWS[app_id] = sf_dir
+    _REGISTERED_VIEWS[app_id] = key
 
 
 # ---------------------------------------------------------------------------

@@ -994,6 +994,8 @@ def encode_jpeg_lossless(
         raise ValueError("encode_jpeg_lossless expects (H,W)/(H,W,3) uint8/uint16")
     if img.ndim == 3 and img.shape[2] != 3:
         raise ValueError(f"expected 3 colour channels, got {img.shape[2]}")
+    if img.shape[0] == 0 or img.shape[1] == 0:
+        raise ValueError("empty image")
     if not 1 <= predictor <= 7:
         raise ValueError(f"lossless predictor must be 1..7, got {predictor}")
     if precision is None:

@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import spread
+
 __all__ = [
     "cosine",
     "knn_bruteforce",
@@ -650,7 +652,7 @@ def _train_rounds(embeddings, cent, iters, id_col, vec_col, round_frames, parall
     # one-file parquet scan would run the whole pass on one task
     emb = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     if parallelism:
-        emb = emb.repartition(parallelism, "vid")
+        emb = spread(emb, parallelism, "vid")
     emb = emb.withColumn("nv", vec_norm(F.col("v")))
     for _ in range(iters):
         # persist-per-round (the measured-fast iterative shape — see
@@ -767,7 +769,7 @@ def ivf_ann(
     def nearest(df: DataFrame, out_id: str, n_keep: int) -> DataFrame:
         src = df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias("v"))
         if parallelism and n_keep == 1:
-            src = src.repartition(parallelism, out_id)
+            src = spread(src, parallelism, out_id)
         pairs = src.withColumn("nv", vec_norm(F.col("v"))).crossJoin(
             F.broadcast(cent_n)
         )

@@ -1,21 +1,25 @@
-"""Lineage, stage metrics, and checkpoint/resume.
+"""Lineage and checkpoint/resume for the bucketed extraction job.
 
-north_rule obligations: per-partition lineage rows + stage metrics
-written alongside results, and a failed run must resume from a
-checkpoint without reprocessing completed ranges.
+north_rule obligations: per-bucket lineage rows written alongside
+results, and a failed run must resume from a checkpoint without
+reprocessing completed ranges.
 
 Design (SURVEY.md §2.9/§4):
 - The corpus is processed in `n_buckets` hash ranges of doc_id
   (bucket = pmod(xxhash64(doc_id), n_buckets)) — the Iceberg-snapshot
-  analog of a hash-range watermark table. Each bucket commits
-  atomically: results append (parquet dir per bucket) + a lineage row
-  (stage='bucket_complete') written only after the append succeeds.
-- resume = anti-join of buckets against completed lineage rows: a
-  rerun skips committed buckets and reprocesses only the rest.
-- stage metrics: every detect/recognize task appends one JSON line per
-  Arrow partition (partition_id from TaskContext, rows_in/rows_out,
-  elapsed ms) into lineage_dir/stage_metrics/ — task-side lineage logs
-  on the shared store (an executor-visible path on a real cluster).
+  analog of a hash-range watermark table.
+- Pending buckets run in batches of up to BATCH_BUCKETS: one
+  extract_spans and one write per batch. The write is partitioned by
+  bucket with dynamic partition overwrite, so results land as
+  results/bucket=<b>/ and a retried batch replaces its bucket
+  directories instead of duplicating them (the idea behind
+  streaming.write_batch_idempotent).
+- A bucket commits when its lineage row (stage='bucket_complete') is
+  written, after its batch's results have landed; rows are written in
+  bucket order.
+- resume = skip the buckets that have a lineage row. A crash inside a
+  batch leaves its later buckets landed but uncommitted; the rerun
+  processes them again and replaces their directories.
 
 On a real deployment the parquet dirs become an Iceberg table and the
 lineage dir a second table; the control flow is identical.
@@ -25,52 +29,24 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
-import uuid
-from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .local_ref import ExtractConfig
+from .partitioning import spread
 from .pipeline import extract_spans
 
-__all__ = ["run_extraction_job", "read_lineage", "read_stage_metrics", "instrument_map_in_pandas"]
+__all__ = ["run_extraction_job", "read_lineage"]
 
-
-def instrument_map_in_pandas(fn, stage: str, metrics_dir: str | None):
-    """Wrap a mapInPandas iterator-fn to append one metrics line per
-    task into metrics_dir (no-op when metrics_dir is None)."""
-    if metrics_dir is None:
-        return fn
-
-    def wrapped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        t0 = time.time()
-        rows_in = 0
-        rows_out = 0
-        for pdf in batches:
-            rows_in += len(pdf)
-            for out in fn(iter([pdf])):
-                rows_out += len(out)
-                yield out
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        os.makedirs(metrics_dir, exist_ok=True)
-        rec = {
-            "stage": stage,
-            "partition_id": pid,
-            "rows_in": rows_in,
-            "rows_out": rows_out,
-            "elapsed_ms": round((time.time() - t0) * 1000, 3),
-        }
-        path = os.path.join(metrics_dir, f"{stage}-{pid}-{uuid.uuid4().hex[:8]}.json")
-        with open(path, "w") as f:
-            f.write(json.dumps(rec) + "\n")
-
-    return wrapped
+# Buckets per batch (one extract_spans and one write). Spark's per-job
+# set-up is paid once per batch, not once per bucket; the cap bounds what
+# a crash throws away: the 4096-bucket deploy runs 64 batches, and a
+# crash loses at most one batch's buckets.
+BATCH_BUCKETS = 64
 
 
 def _bucket_col(n_buckets: int):
@@ -90,6 +66,18 @@ def _completed_buckets(lineage_path: str) -> set[int]:
     return done
 
 
+def _landed_docs(bucket_dir: str) -> int:
+    """Rows written under one bucket directory, from the parquet footers
+    alone: no Spark job, and the extraction DAG is not run again."""
+    if not os.path.isdir(bucket_dir):
+        return 0
+    return sum(
+        pq.read_metadata(os.path.join(bucket_dir, name)).num_rows
+        for name in os.listdir(bucket_dir)
+        if name.endswith(".parquet")
+    )
+
+
 def run_extraction_job(
     spark: SparkSession,
     docs: DataFrame,
@@ -99,42 +87,61 @@ def run_extraction_job(
     n_buckets: int = 8,
     fail_after_bucket: int | None = None,
 ) -> dict:
-    """Extract `docs` bucket-by-bucket with per-bucket commit + resume.
+    """Extract `docs` in hash buckets with per-bucket commit + resume.
 
-    Returns a summary dict. `fail_after_bucket` injects a failure after
-    committing that many buckets (test hook for the resume path).
+    The pending buckets run BATCH_BUCKETS at a time, one extract_spans
+    and one write per batch. Each bucket's lineage row holds `n_docs`
+    (the rows that landed in its directory), `batch_buckets` (how many
+    buckets its batch held) and `elapsed_ms`: the wall time of the
+    whole batch, extraction to count, shared by every bucket of the
+    batch — not a per-bucket time.
+
+    Returns a summary dict. `fail_after_bucket=k` raises after the k-th
+    lineage commit of this call (test hook for the resume path); it can
+    fall inside a batch, whose later buckets then stay landed but
+    uncommitted until a rerun replaces them.
     """
     cfg = cfg or ExtractConfig()
     os.makedirs(lineage_path, exist_ok=True)
     done = _completed_buckets(lineage_path)
-    docs_b = docs.withColumn("_bucket", _bucket_col(n_buckets))
+    pending = [b for b in range(n_buckets) if b not in done]
     processed = 0
-    skipped = 0
-    for b in range(n_buckets):
-        if b in done:
-            skipped += 1
-            continue
-        subset = docs_b.where(F.col("_bucket") == b).drop("_bucket")
+    for i in range(0, len(pending), BATCH_BUCKETS):
+        batch = pending[i : i + BATCH_BUCKETS]
         t0 = time.time()
-        out = extract_spans(spark, subset, cfg)
-        bucket_dir = os.path.join(results_path, f"bucket={b}")
-        out.write.mode("overwrite").parquet(bucket_dir)
-        # count what landed on disk — re-counting `out` would re-execute
-        # the whole extraction DAG (detect+recognize UDFs) a second time
-        n_docs = spark.read.parquet(bucket_dir).count()
-        # commit: the lineage row is written only after the results land
-        rec = {
-            "stage": "bucket_complete",
-            "bucket": b,
-            "n_docs": n_docs,
-            "elapsed_ms": round((time.time() - t0) * 1000, 3),
-        }
-        with open(os.path.join(lineage_path, f"bucket_complete-{b}.json"), "w") as f:
-            f.write(json.dumps(rec) + "\n")
-        processed += 1
-        if fail_after_bucket is not None and processed >= fail_after_bucket:
-            raise RuntimeError(f"injected failure after {processed} buckets")
-    return {"processed_buckets": processed, "skipped_buckets": skipped, "n_buckets": n_buckets}
+        subset = docs if len(batch) == n_buckets else docs.where(_bucket_col(n_buckets).isin(batch))
+        bucket_dirs = {b: os.path.join(results_path, f"bucket={b}") for b in batch}
+        # a bucket that comes out empty writes no directory, so dynamic
+        # overwrite alone would keep an earlier attempt's stale one
+        for d in bucket_dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+        out = extract_spans(spark, subset, cfg).withColumn("bucket", _bucket_col(n_buckets))
+        # each bucket goes to one write task: one file per bucket at any
+        # corpus size, and the batch's files are written in parallel
+        out = spread(out, spark.sparkContext.defaultParallelism, "bucket")
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(results_path)
+        )
+        n_docs = {b: _landed_docs(d) for b, d in bucket_dirs.items()}
+        elapsed_ms = round((time.time() - t0) * 1000, 3)
+        for b in batch:
+            # commit: the lineage row is written only after the results land
+            rec = {
+                "stage": "bucket_complete",
+                "bucket": b,
+                "n_docs": n_docs[b],
+                "batch_buckets": len(batch),
+                "elapsed_ms": elapsed_ms,
+            }
+            with open(os.path.join(lineage_path, f"bucket_complete-{b}.json"), "w") as f:
+                f.write(json.dumps(rec) + "\n")
+            processed += 1
+            if fail_after_bucket is not None and processed >= fail_after_bucket:
+                raise RuntimeError(f"injected failure after {processed} buckets")
+    return {"processed_buckets": processed, "skipped_buckets": n_buckets - len(pending), "n_buckets": n_buckets}
 
 
 def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame:
@@ -145,22 +152,9 @@ def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame:
             with open(os.path.join(lineage_path, name)) as f:
                 rows.extend(json.loads(line) for line in f)
     return spark.createDataFrame(
-        [(r["stage"], int(r["bucket"]), int(r["n_docs"]), float(r["elapsed_ms"])) for r in rows],
-        "stage string, bucket int, n_docs long, elapsed_ms double",
-    )
-
-
-def read_stage_metrics(spark: SparkSession, metrics_dir: str) -> DataFrame:
-    """Task-side stage metrics as a DataFrame (LINEAGE_SCHEMA shape)."""
-    rows = []
-    if os.path.isdir(metrics_dir):
-        for name in sorted(os.listdir(metrics_dir)):
-            with open(os.path.join(metrics_dir, name)) as f:
-                rows.extend(json.loads(line) for line in f)
-    return spark.createDataFrame(
         [
-            (r["stage"], int(r["partition_id"]), int(r["rows_in"]), int(r["rows_out"]), float(r["elapsed_ms"]))
+            (r["stage"], int(r["bucket"]), int(r["n_docs"]), int(r.get("batch_buckets", 1)), float(r["elapsed_ms"]))
             for r in rows
         ],
-        "stage string, partition_id int, rows_in long, rows_out long, elapsed_ms double",
+        "stage string, bucket int, n_docs long, batch_buckets int, elapsed_ms double",
     )

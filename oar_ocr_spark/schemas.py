@@ -90,15 +90,3 @@ REC_SCHEMA = T.StructType(
         T.StructField("confidence", T.FloatType()),
     ]
 )
-
-# lineage/metrics side-table row (north_rule: per-partition lineage +
-# stage metrics written alongside results)
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("rows_in", T.LongType(), False),
-        T.StructField("rows_out", T.LongType(), False),
-        T.StructField("elapsed_ms", T.DoubleType(), False),
-    ]
-)

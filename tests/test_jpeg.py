@@ -653,6 +653,9 @@ class TestLosslessDeepPrecision:
             encode_jpeg_lossless(x, precision=10)  # samples up to 4095
         with pytest.raises(ValueError, match="point transform"):
             encode_jpeg_lossless(x, precision=12, point_transform=12)
+        for empty in (np.zeros((0, 5), np.uint8), np.zeros((5, 0, 3), np.uint16)):
+            with pytest.raises(ValueError, match="empty image"):
+                encode_jpeg_lossless(empty)
         # Pt >= P in the scan header fails loudly at decode
         d = bytearray(encode_jpeg_lossless(x, precision=12, point_transform=3))
         i = d.index(b"\xff\xda")

@@ -2,11 +2,13 @@
 `spark-submit --py-files <zip>` (BASELINE.json north_rule). This test
 builds the real artifact (tools/package_pyfiles.py), launches a real
 spark-submit subprocess against a fresh local master, and checks the
-job extracts, commits lineage, and resumes — i.e. the deployment path
-a 1000-executor cluster would use, not an in-process shortcut."""
+job extracts, commits lineage, and resumes after a crash inside a
+batch of buckets — i.e. the deployment path a 1000-executor cluster
+would use, not an in-process shortcut."""
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import zipfile
@@ -82,12 +84,45 @@ def test_spark_submit_extract_and_resume(spark, tmp_path):
     # the submitted job ran the REAL pipeline: spans came back non-empty
     assert out.where("size(spans) > 0").count() == 12
 
-    # resume: a rerun with the same lineage dir must skip every bucket
+    # a crash inside the batch: buckets 2 and 3 landed but their
+    # lineage rows were never written, and bucket 3 holds stale rows
+    # (another bucket's documents) from a half-finished attempt
+    committed = {}
+    for b in (0, 1):
+        d = os.path.join(results, f"bucket={b}")
+        committed[b] = {n: os.stat(os.path.join(d, n)).st_mtime_ns for n in os.listdir(d)}
+    for b in (2, 3):
+        os.remove(os.path.join(lineage, f"bucket_complete-{b}.json"))
+    stale_src = next(
+        os.path.join(results, f"bucket={b}", n)
+        for b in (0, 1)
+        for n in sorted(committed[b])
+        if n.endswith(".parquet")
+    )
+    os.makedirs(os.path.join(results, "bucket=3"), exist_ok=True)
+    shutil.copy(stale_src, os.path.join(results, "bucket=3", "part-stale.parquet"))
+
     run2 = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600)
     assert run2.returncode == 0, f"resume failed:\n{run2.stdout}\n{run2.stderr}"
     summary2 = json.loads(
         [ln for ln in run2.stdout.splitlines() if ln.startswith('{"job"')][-1]
     )
-    assert summary2["processed_buckets"] == 0
-    assert summary2["skipped_buckets"] == 4
+    assert summary2["processed_buckets"] == 2
+    assert summary2["skipped_buckets"] == 2
+    out = spark.read.parquet(results)
+    assert out.count() == 12
+    assert out.select("doc_id").distinct().count() == 12
+    # the committed buckets were not reprocessed
+    for b in (0, 1):
+        d = os.path.join(results, f"bucket={b}")
+        assert {n: os.stat(os.path.join(d, n)).st_mtime_ns for n in os.listdir(d)} == committed[b]
+
+    # a rerun of the completed job must skip every bucket
+    run3 = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600)
+    assert run3.returncode == 0, f"rerun failed:\n{run3.stdout}\n{run3.stderr}"
+    summary3 = json.loads(
+        [ln for ln in run3.stdout.splitlines() if ln.startswith('{"job"')][-1]
+    )
+    assert summary3["processed_buckets"] == 0
+    assert summary3["skipped_buckets"] == 4
     assert spark.read.parquet(results).count() == 12

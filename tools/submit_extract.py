@@ -27,8 +27,12 @@ Sandbox/test usage (what tests/test_spark_submit.py runs):
         --results /tmp/r --lineage /tmp/l --n-buckets 4
 
 The job is resumable: rerunning with the same --lineage dir skips
-committed hash buckets (per-partition lineage + metrics rows land
-alongside results — oar_ocr_spark/lineage.py).
+committed hash buckets (one lineage row per bucket lands beside the
+results — oar_ocr_spark/lineage.py). Pending buckets run in batches of
+64, one extract-and-write pass per batch, and commit one by one after
+their batch's write. A crash therefore loses at most one batch: the
+rerun redoes that batch's uncommitted buckets and replaces their
+results/bucket=<b>/ directories, so no document lands twice.
 
 Prints ONE summary JSON line on success.
 """
@@ -47,9 +51,12 @@ def main(argv: list[str] | None = None) -> int:
                     help="parquet dir: (doc_id string, spans array<struct<"
                          "kind,text,media_ref,offset>>)")
     ap.add_argument("--results", required=True, help="output parquet root")
-    ap.add_argument("--lineage", required=True, help="lineage/metrics dir")
+    ap.add_argument("--lineage", required=True, help="lineage dir: one row per committed bucket")
     ap.add_argument("--n-buckets", type=int, default=64,
-                    help="hash-bucket commit granularity (resume unit)")
+                    help="hash-bucket commit granularity (resume unit); "
+                         "buckets run up to 64 per batch, one extract-and-"
+                         "write pass each, and a crash loses at most one "
+                         "batch")
     ap.add_argument("--text-type", default="general",
                     choices=["general", "rotated", "table", "seal"])
     ap.add_argument("--shuffle-partitions", type=int, default=None,
