@@ -25,12 +25,12 @@ from __future__ import annotations
 import hashlib
 import html as _html
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..partitioning import python_stage
 
 __all__ = ["WORDS_PER_PARAGRAPH", "BOILERPLATE_BLOCKS", "render_html", "html_corpus_df"]
 
@@ -107,15 +107,9 @@ def html_corpus_df(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, text) → (doc_id, html) rendered pages (Arrow-batched)."""
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (str(doc_id), render_html(str(doc_id), text or ""))
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "html"])
-
-    return docs.select(
-        F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text")
-    ).mapInPandas(it, schema=_HTML_SCHEMA)
+    return python_stage(
+        docs.select(F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text")),
+        lambda doc_id, text: [(str(doc_id), render_html(str(doc_id), text or ""))],
+        _HTML_SCHEMA,
+        "html_corpus",
+    )

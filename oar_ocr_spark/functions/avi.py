@@ -22,14 +22,13 @@ histogram (so frame features are goldenable like page features).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import python_stage
 from .jpeg import decode_jpeg, encode_jpeg
 
 from .codec_guard import loud_decode
@@ -249,15 +248,9 @@ def frame_sample_from_bytes_df(
     The container seek is real: only the sampled '00dc' chunks are JPEG-
     decoded. Features are rounded to 6 dp for hash-stable goldens."""
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                rows.extend(frame_feature_rows(str(ref), bytes(payload), n_sample))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FRAME_FEATURES_SCHEMA.fields]
-            )
-
-    return store.select(
-        F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")
-    ).mapInPandas(it, schema=_FRAME_FEATURES_SCHEMA)
+    return python_stage(
+        store.select(F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")),
+        lambda ref, payload: frame_feature_rows(str(ref), bytes(payload), n_sample),
+        _FRAME_FEATURES_SCHEMA,
+        "frame_sample_from_bytes",
+    )

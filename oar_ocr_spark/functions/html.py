@@ -20,7 +20,7 @@ boilerpipe style — density-based block scoring, no ML):
    highest summed score and emit its blocks, in document order, as
    the main text.
 
-Spark side: one Arrow-batched mapInPandas over (doc_id, html) — the
+Spark side: one Arrow-batched Python stage over (doc_id, html) — the
 same per-row transform shape as every codec in this engine; at corpus
 scale the HTML column arrives from the crawl table and the operator
 is embarrassingly parallel.
@@ -36,13 +36,13 @@ boilerplate block count) from the documents table.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..partitioning import python_stage
 
 __all__ = ["extract_main_content", "html_main_content_df"]
 
@@ -314,16 +314,10 @@ def html_main_content_df(
     df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
 ) -> DataFrame:
     """(doc_id, html) → (doc_id, main_text, n_blocks_kept,
-    n_blocks_dropped) via one Arrow-batched mapInPandas."""
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                text, kept, dropped = extract_main_content(html)
-                rows.append((str(doc_id), text, kept, dropped))
-            yield pd.DataFrame(rows, columns=[f.name for f in _MAIN_SCHEMA.fields])
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(html_col).alias("html")
-    ).mapInPandas(it, schema=_MAIN_SCHEMA)
+    n_blocks_dropped) via one Arrow-batched Python stage."""
+    return python_stage(
+        df.select(F.col(id_col).alias("doc_id"), F.col(html_col).alias("html")),
+        lambda doc_id, html: [(str(doc_id), *extract_main_content(html))],
+        _MAIN_SCHEMA,
+        "html_main_content",
+    )

@@ -2,7 +2,7 @@
 
 Images/audio/video are carried as `binary` columns with typed metadata
 structs; decode / feature-extract / resize / frame-sample run as
-Arrow-batched pandas UDFs over mapInPandas. The codec seam
+Arrow-batched Python stages (partitioning.python_stage). The codec seam
 (``_decode_payload``) decodes REAL bytes for FIVE image formats —
 PNG (functions/png.py, lossless, every legal subformat), JPEG
 (functions/jpeg.py: baseline/progressive/restart/multi-scan, lossy,
@@ -17,13 +17,12 @@ partitioning, UDF signature, batch shapes) is real and tested.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..partitioning import python_stage
 
 __all__ = [
     "MEDIA_META_SCHEMA",
@@ -142,27 +141,24 @@ def payload_store_df(
 ) -> DataFrame:
     """Shared scaffold for every real-format media store: (media_ref)
     refs → one encoded row per ref via `row_fn(ref) -> tuple` in a
-    single Arrow-batched mapInPandas.
+    single Arrow-batched Python stage.
 
-    parallelism: round-robin-repartition the refs first. A small
-    single-file parquet arrives as ONE scan partition, serializing the
-    expensive per-ref UDF — the same fix as dedup.simhash_df; at corpus
-    scale the refs arrive pre-partitioned and this stays None.
-    Round-robin, not hash-by-ref: these ref sets are tiny (tens to
-    hundreds of rows) and each row costs tens to hundreds of
-    codec-milliseconds, so hash collisions directly lengthen the stage
-    tail (measured: 48 jp2 refs hashed into 32 partitions put 4-5
+    parallelism: spread the refs round-robin first. A small single-file
+    parquet arrives as ONE scan partition, serializing the expensive
+    per-ref UDF; at corpus scale the refs arrive pre-partitioned and
+    this stays None. Round-robin, not hash-by-ref: these ref sets are
+    tiny (tens to hundreds of rows) and each row costs tens to hundreds
+    of codec-milliseconds, so hash collisions directly lengthen the
+    stage tail (measured: 48 jp2 refs hashed into 32 partitions put 4-5
     EBCOT pages on one task); round-robin gives the exact even split,
     and results are partition-invariant by contract."""
-    if parallelism:
-        refs = refs.repartition(parallelism)
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            yield pd.DataFrame([row_fn(ref) for ref in pdf["media_ref"]], columns=cols)
-
-    return refs.select(F.col(ref_col).alias("media_ref")).mapInPandas(it, schema=schema)
+    return python_stage(
+        refs.select(F.col(ref_col).alias("media_ref")),
+        lambda ref: (row_fn(ref),),
+        schema,
+        "payload_store",
+        parallelism=parallelism,
+    )
 
 
 def png_store_df(
@@ -615,16 +611,12 @@ def fax_store_df(
 def decode_media_df(refs: DataFrame, ref_col: str = "media_ref") -> DataFrame:
     """(media_ref) → decoded metadata row per media item."""
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"]:
-                img = _decode_payload(ref, "image")
-                rows.append((ref, "image", img.shape[1], img.shape[0], img.nbytes))
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_META_SCHEMA.fields])
+    def row(ref: str) -> list[tuple]:
+        img = _decode_payload(ref, "image")
+        return [(ref, "image", img.shape[1], img.shape[0], img.nbytes)]
 
-    return refs.select(F.col(ref_col).alias("media_ref")).mapInPandas(
-        it, schema=MEDIA_META_SCHEMA
+    return python_stage(
+        refs.select(F.col(ref_col).alias("media_ref")), row, MEDIA_META_SCHEMA, "decode_media"
     )
 
 
@@ -649,17 +641,11 @@ def image_features_df(refs: DataFrame, ref_col: str = "media_ref") -> DataFrame:
     from ..local_ref import ExtractConfig
 
     cfg = ExtractConfig()
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _feature_row(ref, _decode_payload(ref, "image"), cfg)
-                for ref in pdf["media_ref"]
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in _FEATURES_SCHEMA.fields])
-
-    return refs.select(F.col(ref_col).alias("media_ref")).mapInPandas(
-        it, schema=_FEATURES_SCHEMA
+    return python_stage(
+        refs.select(F.col(ref_col).alias("media_ref")),
+        lambda ref: [_feature_row(ref, _decode_payload(ref, "image"), cfg)],
+        _FEATURES_SCHEMA,
+        "image_features",
     )
 
 
@@ -673,18 +659,12 @@ def image_features_from_bytes_df(
     from ..local_ref import ExtractConfig
 
     cfg = ExtractConfig()
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _feature_row(ref, _decode_payload(ref, "image", payload), cfg)
-                for ref, payload in zip(pdf["media_ref"], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in _FEATURES_SCHEMA.fields])
-
-    return store.select(
-        F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")
-    ).mapInPandas(it, schema=_FEATURES_SCHEMA)
+    return python_stage(
+        store.select(F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")),
+        lambda ref, payload: [_feature_row(ref, _decode_payload(ref, "image", payload), cfg)],
+        _FEATURES_SCHEMA,
+        "image_features_from_bytes",
+    )
 
 
 _FRAME_SCHEMA = T.StructType(
@@ -706,21 +686,17 @@ def frame_sample_df(
     decoded page — the real sampler would seek the container). Shows
     the 1→N explode shape + binary payload batching."""
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"]:
-                img = _decode_payload(ref, "image")
-                h = img.shape[0]
-                for i in range(n_frames):
-                    y0 = (h * i) // n_frames
-                    y1 = (h * (i + 1)) // n_frames
-                    strip = np.ascontiguousarray(img[y0:y1])
-                    rows.append(
-                        (ref, i, strip.tobytes(), strip.shape[0], strip.shape[1])
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in _FRAME_SCHEMA.fields])
+    def row(ref: str) -> list[tuple]:
+        img = _decode_payload(ref, "image")
+        h = img.shape[0]
+        rows = []
+        for i in range(n_frames):
+            y0 = (h * i) // n_frames
+            y1 = (h * (i + 1)) // n_frames
+            strip = np.ascontiguousarray(img[y0:y1])
+            rows.append((ref, i, strip.tobytes(), strip.shape[0], strip.shape[1]))
+        return rows
 
-    return refs.select(F.col(ref_col).alias("media_ref")).mapInPandas(
-        it, schema=_FRAME_SCHEMA
+    return python_stage(
+        refs.select(F.col(ref_col).alias("media_ref")), row, _FRAME_SCHEMA, "frame_sample"
     )

@@ -8,7 +8,7 @@ real (minimal, declared-subset) PDF 1.4 writer and parser — no PDF
 library exists in this environment — plus the distributed unpack shape:
 
   container table (pdf_ref, payload:binary)
-    → one Arrow-batched mapInPandas parse          (pdf_media_store_df)
+    → one Arrow-batched Python-stage parse         (pdf_media_store_df)
     → page store (media_ref, payload:PNG bytes)
     → the existing extract_spans(media_store=...) byte path.
 
@@ -77,13 +77,12 @@ from __future__ import annotations
 import re
 import struct
 import zlib
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..partitioning import python_stage
 
 from .codec_guard import loud_decode
 
@@ -2764,10 +2763,8 @@ def pdf_store_df(
     encrypted (1/4 of docs), and the per-page flate|Separation|DeviceN
     image mix — so a gate query drives the parser's whole structural
     surface while keeping span goldens byte-identical."""
-    if parallelism:
-        from ..partitioning import spread
+    from ..fixtures.render import render_page
 
-        docs = spread(docs, parallelism, "doc_id")
     refs = (
         docs.select(
             "doc_id",
@@ -2779,37 +2776,24 @@ def pdf_store_df(
         .where(F.size("refs") > 0)
     )
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..fixtures.render import render_page
+    def row(doc_id: str, media_refs) -> list[tuple]:
+        media_refs = list(media_refs)
+        pages = [render_page(r) for r in media_refs]
+        fmt, xref, enc = "flate", "classic", encrypt
+        if mix:
+            hsh = zlib.crc32(b"pdf-doc-flavor:" + str(doc_id).encode())
+            fmt = "mix"
+            xref = "stream" if (hsh >> 4) & 1 else "classic"
+            enc = (None, None, None, None, None, None,
+                   "rc4-128", "aes-128")[hsh % 8]
+        payload = encode_pdf(
+            pages, media_refs, image_format=fmt, xref_format=xref, encrypt=enc
+        )
+        return [(doc_id, payload, len(pages))]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, media_refs in zip(pdf["doc_id"], pdf["refs"]):
-                media_refs = list(media_refs)
-                pages = [render_page(r) for r in media_refs]
-                fmt, xref, enc = "flate", "classic", encrypt
-                if mix:
-                    hsh = zlib.crc32(b"pdf-doc-flavor:" + str(doc_id).encode())
-                    fmt = "mix"
-                    xref = "stream" if (hsh >> 4) & 1 else "classic"
-                    enc = (None, None, None, None, None, None,
-                           "rc4-128", "aes-128")[hsh % 8]
-                rows.append(
-                    (
-                        doc_id,
-                        encode_pdf(
-                            pages,
-                            media_refs,
-                            image_format=fmt,
-                            xref_format=xref,
-                            encrypt=enc,
-                        ),
-                        len(pages),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _PDF_STORE_SCHEMA.fields])
-
-    return refs.mapInPandas(it, schema=_PDF_STORE_SCHEMA)
+    return python_stage(
+        refs, row, _PDF_STORE_SCHEMA, "pdf_store", parallelism=parallelism, by=("doc_id",)
+    )
 
 
 def pdf_media_store_df(pdfs: DataFrame) -> DataFrame:
@@ -2822,22 +2806,22 @@ def pdf_media_store_df(pdfs: DataFrame) -> DataFrame:
     images meet in the same page-store shape."""
     from .png import encode_png
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pdf_ref, payload in zip(pdf["pdf_ref"], pdf["payload"]):
-                doc = PdfDocument(bytes(payload))
-                refs = _split_refs(doc.info_title())
-                pages = [doc.page_image(p) for p in doc.pages()]
-                if refs is None or len(refs) != len(pages):
-                    refs = [f"{pdf_ref}#page{i}" for i in range(len(pages))]
-                for ref, page in zip(refs, pages):
-                    if page.ndim == 3:  # grey pipeline: luma-free mean keeps ints exact
-                        page = page[:, :, 0]
-                    rows.append((ref, encode_png(page)))
-            yield pd.DataFrame(rows, columns=[f.name for f in _PAGE_STORE_SCHEMA.fields])
+    def row(pdf_ref: str, payload) -> list[tuple]:
+        doc = PdfDocument(bytes(payload))
+        refs = _split_refs(doc.info_title())
+        pages = [doc.page_image(p) for p in doc.pages()]
+        if refs is None or len(refs) != len(pages):
+            refs = [f"{pdf_ref}#page{i}" for i in range(len(pages))]
+        rows = []
+        for ref, page in zip(refs, pages):
+            if page.ndim == 3:  # grey pipeline: luma-free mean keeps ints exact
+                page = page[:, :, 0]
+            rows.append((ref, encode_png(page)))
+        return rows
 
-    return pdfs.select("pdf_ref", "payload").mapInPandas(it, schema=_PAGE_STORE_SCHEMA)
+    return python_stage(
+        pdfs.select("pdf_ref", "payload"), row, _PAGE_STORE_SCHEMA, "pdf_media_store"
+    )
 
 
 _PDF_TEXT_SPANS_SCHEMA = T.StructType(
@@ -2862,10 +2846,6 @@ def pdf_text_store_df(
     whole §9 text surface behind one operator. Span selection runs
     JVM-side (filter/transform HOFs); only the writer runs in the
     Arrow-batched UDF."""
-    if parallelism:
-        from ..partitioning import spread
-
-        docs = spread(docs, parallelism, "doc_id")
     refs = (
         docs.select(
             "doc_id",
@@ -2877,37 +2857,24 @@ def pdf_text_store_df(
         .where(F.size("tspans") > 0)
     )
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, tspans in zip(pdf["doc_id"], pdf["tspans"]):
-                texts = [s["text"] for s in tspans]
-                prefs = [str(s["offset"]) for s in tspans]
-                tfmt, xref, enc = "literal", "classic", None
-                if mix:
-                    hsh = zlib.crc32(
-                        b"pdf-textdoc-flavor:" + str(doc_id).encode()
-                    )
-                    tfmt = "mix"
-                    xref = "stream" if (hsh >> 4) & 1 else "classic"
-                    enc = (None, None, None, None, None, None,
-                           "rc4-128", "aes-128")[hsh % 8]
-                rows.append(
-                    (
-                        doc_id,
-                        encode_pdf(
-                            texts,
-                            prefs,
-                            text_format=tfmt,
-                            xref_format=xref,
-                            encrypt=enc,
-                        ),
-                        len(texts),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _PDF_STORE_SCHEMA.fields])
+    def row(doc_id: str, tspans) -> list[tuple]:
+        texts = [s["text"] for s in tspans]
+        prefs = [str(s["offset"]) for s in tspans]
+        tfmt, xref, enc = "literal", "classic", None
+        if mix:
+            hsh = zlib.crc32(b"pdf-textdoc-flavor:" + str(doc_id).encode())
+            tfmt = "mix"
+            xref = "stream" if (hsh >> 4) & 1 else "classic"
+            enc = (None, None, None, None, None, None,
+                   "rc4-128", "aes-128")[hsh % 8]
+        payload = encode_pdf(
+            texts, prefs, text_format=tfmt, xref_format=xref, encrypt=enc
+        )
+        return [(doc_id, payload, len(texts))]
 
-    return refs.mapInPandas(it, schema=_PDF_STORE_SCHEMA)
+    return python_stage(
+        refs, row, _PDF_STORE_SCHEMA, "pdf_text_store", parallelism=parallelism, by=("doc_id",)
+    )
 
 
 def pdf_text_spans_df(pdfs: DataFrame) -> DataFrame:
@@ -2919,30 +2886,22 @@ def pdf_text_spans_df(pdfs: DataFrame) -> DataFrame:
     hybrid split, image pages belong to pdf_media_store_df."""
     from .pdf_text import page_text
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pdf_ref, payload in zip(pdf["pdf_ref"], pdf["payload"]):
-                doc = PdfDocument(bytes(payload))
-                refs = _split_refs(doc.info_title())
-                pages = doc.pages()
-                if refs is None or len(refs) != len(pages):
-                    raise ValueError(
-                        f"text-store PDF {pdf_ref} lacks page-offset refs"
-                    )
-                for ref, page in zip(refs, pages):
-                    text = page_text(doc, page)
-                    if text is None:
-                        raise ValueError(
-                            f"page {ref} of {pdf_ref} has no text layer"
-                        )
-                    rows.append((pdf_ref, int(ref), text))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _PDF_TEXT_SPANS_SCHEMA.fields]
-            )
+    def row(pdf_ref: str, payload) -> list[tuple]:
+        doc = PdfDocument(bytes(payload))
+        refs = _split_refs(doc.info_title())
+        pages = doc.pages()
+        if refs is None or len(refs) != len(pages):
+            raise ValueError(f"text-store PDF {pdf_ref} lacks page-offset refs")
+        rows = []
+        for ref, page in zip(refs, pages):
+            text = page_text(doc, page)
+            if text is None:
+                raise ValueError(f"page {ref} of {pdf_ref} has no text layer")
+            rows.append((pdf_ref, int(ref), text))
+        return rows
 
-    return pdfs.select("pdf_ref", "payload").mapInPandas(
-        it, schema=_PDF_TEXT_SPANS_SCHEMA
+    return python_stage(
+        pdfs.select("pdf_ref", "payload"), row, _PDF_TEXT_SPANS_SCHEMA, "pdf_text_spans"
     )
 
 
@@ -2970,10 +2929,8 @@ def pdf_hybrid_store_df(
     exists ONLY as its PDF, and the engine recovers text pages from
     the embedded layer (no OCR) while scanned pages flow the full
     extraction DAG."""
-    if parallelism:
-        from ..partitioning import spread
+    from ..fixtures.render import render_page
 
-        docs = spread(docs, parallelism, "doc_id")
     refs = (
         docs.select(
             "doc_id",
@@ -2987,40 +2944,31 @@ def pdf_hybrid_store_df(
         .where(F.size("pspans") > 0)
     )
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..fixtures.render import render_page
+    def row(doc_id: str, pspans) -> list[tuple]:
+        pages: list = []
+        prefs: list[str] = []
+        for s in pspans:
+            if s["kind"] == "text":
+                pages.append(s["text"])
+                prefs.append(f"{s['offset']}:")
+            else:
+                pages.append(render_page(s["media_ref"]))
+                prefs.append(f"{s['offset']}:{s['media_ref']}")
+        hsh = zlib.crc32(b"pdf-hybrid-flavor:" + str(doc_id).encode())
+        payload = encode_pdf(
+            pages,
+            prefs,
+            image_format="mix",
+            text_format="mix",
+            xref_format="stream" if (hsh >> 4) & 1 else "classic",
+            encrypt=(None, None, None, None, None, None,
+                     "rc4-128", "aes-128")[hsh % 8],
+        )
+        return [(doc_id, payload, len(pages))]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, pspans in zip(pdf["doc_id"], pdf["pspans"]):
-                pages: list = []
-                prefs: list[str] = []
-                for s in pspans:
-                    if s["kind"] == "text":
-                        pages.append(s["text"])
-                        prefs.append(f"{s['offset']}:")
-                    else:
-                        pages.append(render_page(s["media_ref"]))
-                        prefs.append(f"{s['offset']}:{s['media_ref']}")
-                hsh = zlib.crc32(b"pdf-hybrid-flavor:" + str(doc_id).encode())
-                rows.append(
-                    (
-                        doc_id,
-                        encode_pdf(
-                            pages,
-                            prefs,
-                            image_format="mix",
-                            text_format="mix",
-                            xref_format="stream" if (hsh >> 4) & 1 else "classic",
-                            encrypt=(None, None, None, None, None, None,
-                                     "rc4-128", "aes-128")[hsh % 8],
-                        ),
-                        len(pages),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _PDF_STORE_SCHEMA.fields])
-
-    return refs.mapInPandas(it, schema=_PDF_STORE_SCHEMA)
+    return python_stage(
+        refs, row, _PDF_STORE_SCHEMA, "pdf_hybrid_store", parallelism=parallelism, by=("doc_id",)
+    )
 
 
 def pdf_hybrid_unpack_df(pdfs: DataFrame) -> DataFrame:
@@ -3036,40 +2984,27 @@ def pdf_hybrid_unpack_df(pdfs: DataFrame) -> DataFrame:
     from .png import encode_png
     from .pdf_text import page_text
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pdf_ref, payload in zip(pdf["pdf_ref"], pdf["payload"]):
-                doc = PdfDocument(bytes(payload))
-                refs = _split_refs(doc.info_title())
-                pages = doc.pages()
-                if refs is None or len(refs) != len(pages):
-                    raise ValueError(
-                        f"hybrid PDF {pdf_ref} lacks page refs"
-                    )
-                for ref, page in zip(refs, pages):
-                    off_s, _, mref = ref.partition(":")
-                    if mref:
-                        img = doc.page_image(page)
-                        if img.ndim == 3:
-                            img = img[:, :, 0]
-                        rows.append(
-                            (pdf_ref, int(off_s), "media", None, mref,
-                             encode_png(img))
-                        )
-                    else:
-                        text = page_text(doc, page)
-                        if text is None:
-                            raise ValueError(
-                                f"text page {ref} of {pdf_ref} has no text"
-                            )
-                        rows.append(
-                            (pdf_ref, int(off_s), "text", text, None, None)
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _HYBRID_UNPACK_SCHEMA.fields]
-            )
+    def row(pdf_ref: str, payload) -> list[tuple]:
+        doc = PdfDocument(bytes(payload))
+        refs = _split_refs(doc.info_title())
+        pages = doc.pages()
+        if refs is None or len(refs) != len(pages):
+            raise ValueError(f"hybrid PDF {pdf_ref} lacks page refs")
+        rows = []
+        for ref, page in zip(refs, pages):
+            off_s, _, mref = ref.partition(":")
+            if mref:
+                img = doc.page_image(page)
+                if img.ndim == 3:
+                    img = img[:, :, 0]
+                rows.append((pdf_ref, int(off_s), "media", None, mref, encode_png(img)))
+            else:
+                text = page_text(doc, page)
+                if text is None:
+                    raise ValueError(f"text page {ref} of {pdf_ref} has no text")
+                rows.append((pdf_ref, int(off_s), "text", text, None, None))
+        return rows
 
-    return pdfs.select("pdf_ref", "payload").mapInPandas(
-        it, schema=_HYBRID_UNPACK_SCHEMA
+    return python_stage(
+        pdfs.select("pdf_ref", "payload"), row, _HYBRID_UNPACK_SCHEMA, "pdf_hybrid_unpack"
     )

@@ -966,12 +966,13 @@ def tiff_store_df(docs, parallelism: int | None = None):
     multi-page TIFF per document packing its media spans' rendered
     pages in span order (the archival-scan twin of pdf_store_df; same
     JVM-side ref selection, same single Arrow-batched boundary)."""
+    import zlib
+
     from pyspark.sql import functions as F
 
-    if parallelism:
-        from ..partitioning import spread
+    from ..fixtures.render import render_page
+    from ..partitioning import python_stage
 
-        docs = spread(docs, parallelism, "doc_id")
     refs = (
         docs.select(
             "doc_id",
@@ -984,34 +985,20 @@ def tiff_store_df(docs, parallelism: int | None = None):
     )
     store_schema, _ = _tiff_schemas()
 
-    def it(batches):
-        import zlib
+    def row(doc_id: str, media_refs) -> list[tuple]:
+        media_refs = list(media_refs)
+        pages = [render_page(r) for r in media_refs]
+        # per-document container flavor, crc32-chosen like the image
+        # stores — every flavor lossless, so the span goldens are
+        # unaffected
+        comp = ("none", "packbits", "palette16", "cmyk", "deflate")[
+            zlib.crc32(str(doc_id).encode("utf-8")) % 5
+        ]
+        return [(doc_id, encode_tiff_multipage(pages, media_refs, compression=comp), len(pages))]
 
-        import pandas as pd
-
-        from ..fixtures.render import render_page
-
-        for pdf in batches:
-            rows = []
-            for doc_id, media_refs in zip(pdf["doc_id"], pdf["refs"]):
-                media_refs = list(media_refs)
-                pages = [render_page(r) for r in media_refs]
-                # per-document container flavor, crc32-chosen like the
-                # image stores — every flavor lossless, so the span
-                # goldens are unaffected
-                comp = ("none", "packbits", "palette16", "cmyk", "deflate")[
-                    zlib.crc32(str(doc_id).encode("utf-8")) % 5
-                ]
-                rows.append(
-                    (
-                        doc_id,
-                        encode_tiff_multipage(pages, media_refs, compression=comp),
-                        len(pages),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in store_schema.fields])
-
-    return refs.mapInPandas(it, schema=store_schema)
+    return python_stage(
+        refs, row, store_schema, "tiff_store", parallelism=parallelism, by=("doc_id",)
+    )
 
 
 def tiff_media_store_df(tiffs):
@@ -1022,24 +1009,18 @@ def tiff_media_store_df(tiffs):
     media_ref (fallback '<tiff_ref>#page<i>'). Same output shape as
     pdf_media_store_df — archival TIFFs, PDFs and loose images all
     meet in one page-store seam feeding extract_spans(media_store=...)."""
+    from ..partitioning import python_stage
+    from .multimodal import _to_grey
+    from .png import encode_png
+
     _, page_schema = _tiff_schemas()
 
-    def it(batches):
-        import pandas as pd
+    def row(tiff_ref: str, payload) -> list[tuple]:
+        data = bytes(payload)
+        refs = decode_tiff_refs(data)
+        pages = decode_tiff_pages(data)
+        if refs is None or len(refs) != len(pages):
+            refs = [f"{tiff_ref}#page{i}" for i in range(len(pages))]
+        return [(ref, encode_png(_to_grey(page))) for ref, page in zip(refs, pages)]
 
-        from .multimodal import _to_grey
-        from .png import encode_png
-
-        for pdf in batches:
-            rows = []
-            for tiff_ref, payload in zip(pdf["tiff_ref"], pdf["payload"]):
-                data = bytes(payload)
-                refs = decode_tiff_refs(data)
-                pages = decode_tiff_pages(data)
-                if refs is None or len(refs) != len(pages):
-                    refs = [f"{tiff_ref}#page{i}" for i in range(len(pages))]
-                for ref, page in zip(refs, pages):
-                    rows.append((ref, encode_png(_to_grey(page))))
-            yield pd.DataFrame(rows, columns=[f.name for f in page_schema.fields])
-
-    return tiffs.select("tiff_ref", "payload").mapInPandas(it, schema=page_schema)
+    return python_stage(tiffs.select("tiff_ref", "payload"), row, page_schema, "tiff_media_store")

@@ -40,14 +40,13 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import python_stage
 from .codec_guard import loud_decode
 
 __all__ = [
@@ -768,33 +767,30 @@ def audio_features_from_bytes_df(
     except rms, which is rounded to 6 dp (hash-stable across
     partitionings — int64 sum of squares then one float op)."""
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                samples, rate = decode_wav(bytes(payload))
-                mono = samples[:, 0].astype(np.int64)
-                n = len(mono)
-                rms = float(np.sqrt(np.sum(mono * mono) / n)) if n else 0.0
-                sign = np.sign(mono)
-                nz = sign != 0
-                compact = sign[nz]
-                zc = int(np.count_nonzero(np.diff(compact) != 0))
-                rows.append(
-                    (
-                        ref,
-                        n,
-                        rate,
-                        int(n * 1000 // rate),
-                        round(rms, 6),
-                        int(np.max(np.abs(mono))) if n else 0,
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _AUDIO_FEATURES_SCHEMA.fields]
+    def row(ref: str, payload) -> list[tuple]:
+        samples, rate = decode_wav(bytes(payload))
+        mono = samples[:, 0].astype(np.int64)
+        n = len(mono)
+        rms = float(np.sqrt(np.sum(mono * mono) / n)) if n else 0.0
+        sign = np.sign(mono)
+        nz = sign != 0
+        compact = sign[nz]
+        zc = int(np.count_nonzero(np.diff(compact) != 0))
+        return [
+            (
+                ref,
+                n,
+                rate,
+                int(n * 1000 // rate),
+                round(rms, 6),
+                int(np.max(np.abs(mono))) if n else 0,
+                zc,
             )
+        ]
 
-    return store.select(
-        F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")
-    ).mapInPandas(it, schema=_AUDIO_FEATURES_SCHEMA)
+    return python_stage(
+        store.select(F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")),
+        row,
+        _AUDIO_FEATURES_SCHEMA,
+        "audio_features_from_bytes",
+    )

@@ -18,14 +18,22 @@ never coalesces it). Assignment stays a deterministic function of the
 key columns — no rand(), so task retries are safe (SPARK-38388) — and
 results are unchanged because every consumer is partition-invariant by
 contract.
+
+``python_stage`` is the one way a per-row Python operator enters a
+plan: it owns the spread policy and names the MapInPandas node, so
+SQL metrics attribute to the operator. Batch-vectorized kernels, which
+need the whole Arrow batch at once, call ``mapInPandas`` themselves.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable, Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-__all__ = ["spread"]
+__all__ = ["spread", "python_stage"]
 
 
 def spread(df: DataFrame, n: int, *cols: str) -> DataFrame:
@@ -34,3 +42,38 @@ def spread(df: DataFrame, n: int, *cols: str) -> DataFrame:
     if not cols:
         return df.repartition(n)
     return df.repartition(n, F.xxhash64(*[F.col(c) for c in cols]))
+
+
+def python_stage(
+    df: DataFrame,
+    fn: Callable[..., Iterable[tuple]],
+    schema: T.StructType,
+    name: str,
+    parallelism: int | None = None,
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """Run ``fn(*row)`` over every row of ``df`` as one Arrow-batched
+    MapInPandas node named ``name``.
+
+    ``fn`` takes the row's columns in ``df``'s column order and returns
+    an iterable of ``schema`` tuples — zero, one or many output rows per
+    input row. ``parallelism`` spreads the input first (``spread``):
+    round-robin without ``by`` keys — the even split small, costly ref
+    sets need — else xxhash64 of ``by``. A single-file scan arrives as
+    ONE partition, so a costly stage fed by one must set it."""
+    if parallelism:
+        df = spread(df, parallelism, *by)
+    cols = schema.fieldNames()
+
+    def stage(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows: list[tuple] = []
+            for row in zip(*(pdf[c] for c in pdf.columns)):
+                rows.extend(fn(*row))
+            yield pd.DataFrame(rows, columns=cols)
+
+    # the plan node reads "MapInPandas <name>(…)"
+    stage.__name__ = stage.__qualname__ = name
+    return df.mapInPandas(stage, schema=schema)

@@ -1,47 +1,43 @@
 """The Spark extraction DAG (SURVEY.md §7 target DAG).
 
     documents(doc_id, spans)
-      │ repartition(P, doc_id)                      -- explicit N→4N scaling
+      │ spread(P, doc_id)                           -- xxhash64 exchange
       ├─ text spans: explode(filter(kind='text'))   -- pure HOFs, no UDF
       └─ media spans: explode(filter(kind='media'))
-           → [detect stage: mapInPandas]            -- render→orient→mask→
+           → [detect stage: detect_iter]            -- render→orient→mask→
              (doc_id, offset, media_ref,               resize→DB→sort→crop,
               det_idx, crop, wh_ratio, bucket)         one Python boundary
            → repartition(P, doc_id, offset, det_idx)-- spreads heavy docs
-           → sortWithinPartitions(bucket, wh_ratio) -- width-tight batches
-           → [recognize stage: mapInPandas]         -- stack per bucket →
+           → [recognize stage: rec_iter]            -- stack per bucket →
              (doc_id, offset, det_idx, text, conf)     logits → CTC decode
       → union → groupBy(doc_id).agg(sort_array(collect_list(...)))
       → transform with index → results(doc_id, spans)
 
 Design notes (scale rationale):
 - The reference's per-stage graph (preprocess → detect → crop) is fused
-  into ONE mapInPandas: pages never cross the JVM↔Python boundary more
-  than once, and only small crops enter the shuffle (the reference's
-  zero-copy Arc<RgbImage> sharing, ocr.rs:565, has the same goal).
+  into ONE per-row Python stage (partitioning.python_stage): pages never
+  cross the JVM↔Python boundary more than once, and only small crops
+  enter the shuffle (the reference's zero-copy Arc<RgbImage> sharing,
+  ocr.rs:565, has the same goal).
 - The crop repartition is the distributed analog of the reference's
   *global crop pooling* (ocr.rs:594-634): a heavy many-region document
   fans its crops across all partitions (hash on (doc_id, offset,
   det_idx) = built-in key salting), so recognition load is balanced
   regardless of document skew; AQE handles residual imbalance.
-- sortWithinPartitions(bucket, wh_ratio) reproduces the reference's
-  wh_ratio-sorted recognition batches (ocr.rs:802-831) without any
-  global sort barrier.
 - Recognition width uses the *per-crop* bucket, not the Arrow batch
   max (aspect_ratio_bucketing.rs approach), so decoded text is
   independent of batch composition → span output is identical at any
-  parallelism (north_rule partition invariance).
-- `pooled=False` skips the crop shuffle and recognizes inside the
-  detect task — fewer shuffles, but no cross-page batching and no skew
-  spreading; bench.py compares both.
+  parallelism (north_rule partition invariance). The reference's
+  wh_ratio-sorted batching (ocr.rs:802-831) only saves padding for a
+  model that pads to the batch max, so there is no sort.
 - Final assembly is pure Catalyst (sort_array + transform): no window
   state, one shuffle for the groupBy.
 """
 
 from __future__ import annotations
 
-import time
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -50,21 +46,22 @@ from pyspark.sql import functions as F
 
 from .local_ref import ExtractConfig, bucket_ratio, preprocess_page
 from .models.synthetic import BG, CHAR_BASE, VOCAB, classify_line_orientation
-from .operators.ctc import ctc_collapse_batch
-from .schemas import CROPS_SCHEMA, REC_SCHEMA, RESULTS_SCHEMA
+from .operators.ctc import ctc_collapse_batch, ctc_word_boxes
+from .partitioning import python_stage, spread
+from .schemas import CROPS_SCHEMA, REC_SCHEMA, REC_WORDBOX_SCHEMA, RESULTS_SCHEMA
 
 __all__ = ["extract_spans", "detect_crops_df", "recognize_df", "assemble_results"]
 
 
 # --------------------------------------------------------------------------
-# stage bodies (plain python over numpy, called from mapInPandas iterators)
+# stage bodies (plain python over numpy, called from the Python stages)
 # --------------------------------------------------------------------------
 
 def _detect_one_page(
+    cfg: ExtractConfig,
     doc_id: str,
     offset: int,
     media_ref: str,
-    cfg: ExtractConfig,
     payload: bytes | None = None,
 ) -> list[tuple]:
     """Decode/render + preprocess + detect + reading-order sort + crop
@@ -144,15 +141,15 @@ def _decode_row_for_crop(
     return out
 
 
-def _recognize_chunk(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    """Recognize one Arrow batch of crops: line-orient, group by bucket,
-    direct per-row CTC-index decode (bit-identical to the logits path —
-    both funnel through ctc_collapse_batch), score-threshold blanking."""
+def _decode_crops(pdf: pd.DataFrame, cfg: ExtractConfig) -> list[tuple]:
+    """Decode one Arrow batch of crops to per-crop (text, conf, cols, T)
+    in row order: line-orient, group by bucket, direct per-row
+    CTC-index decode (bit-identical to the logits path — both funnel
+    through ctc_collapse_batch), score-threshold blanking of text."""
     import zlib
 
     n = len(pdf)
-    texts: list[str] = [""] * n
-    confs = np.zeros(n, dtype=np.float32)
+    out: list[tuple] = [None] * n
     crop_bytes = pdf["crop"].to_numpy()
     crop_h = pdf["crop_h"].to_numpy()
     crop_w = pdf["crop_w"].to_numpy()
@@ -178,20 +175,24 @@ def _recognize_chunk(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             idx = rows - CHAR_BASE
             idx = np.where((idx >= 1) & (idx < len(VOCAB)), idx, 0)
             prob = np.where(idx > 0, np.float32(0.95), np.float32(0.05))
-            for p, (text, conf, _cols, _T) in zip(pos, ctc_collapse_batch(idx, prob, VOCAB)):
+            for p, (text, conf, cols, T) in zip(pos, ctc_collapse_batch(idx, prob, VOCAB)):
                 # index-parity blanking (text_recognition_adapter.rs:61-102)
                 if conf < cfg.rec_score_threshold:
                     text = ""
-                texts[int(p)] = text
-                confs[int(p)] = conf
+                out[int(p)] = (text, conf, cols, T)
+    return out
+
+
+def _rec_frame(pdf: pd.DataFrame, decoded: list[tuple]) -> pd.DataFrame:
+    """REC_SCHEMA frame of one crop batch and its _decode_crops output."""
     return pd.DataFrame(
         {
             "doc_id": pdf["doc_id"].to_numpy(),
             "offset": pdf["offset"].to_numpy(),
             "media_ref": pdf["media_ref"].to_numpy(),
             "det_idx": pdf["det_idx"].to_numpy(),
-            "text": texts,
-            "confidence": confs,
+            "text": [d[0] for d in decoded],
+            "confidence": np.array([d[1] for d in decoded], dtype=np.float32),
         }
     )
 
@@ -207,50 +208,31 @@ def recognize_with_word_boxes(crops: DataFrame, cfg: ExtractConfig) -> DataFrame
     the crop's deterministic bucket (partition-invariant), so
     effective_col_num = T · wh_ratio / bucket exactly reproduces the
     reference's padding-undo math."""
-    from .operators.ctc import ctc_word_boxes
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib
-
+    def wordbox_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            base = _recognize_chunk(pdf, cfg)
-            word_boxes: list[list[list[float]]] = []
-            for k in range(len(pdf)):
-                crop = np.frombuffer(
-                    zlib.decompress(pdf["crop"].iloc[k]), dtype=np.uint8
-                ).reshape(pdf["crop_h"].iloc[k], pdf["crop_w"].iloc[k])
-                if cfg.use_line_orientation and classify_line_orientation(crop) == 1:
-                    crop = crop[::-1, ::-1]
-                b = int(pdf["bucket"].iloc[k])
-                row = _decode_row_for_crop(crop, cfg.rec_target_h, b).astype(np.int32)
-                idx = row - CHAR_BASE
-                idx = np.where((idx >= 1) & (idx < len(VOCAB)), idx, 0)
-                prob = np.where(idx > 0, np.float32(0.95), np.float32(0.05))
-                [(text, _conf, cols, T)] = ctc_collapse_batch(
-                    idx[None, :], prob[None, :], VOCAB
+            decoded = _decode_crops(pdf, cfg)
+            boxes = pdf[["x1", "y1", "x2", "y2"]].to_numpy(np.float32)
+            word_boxes = [
+                # a blanked text gets no boxes: the unblanked decode's
+                # columns must not leak through
+                []
+                if conf < cfg.rec_score_threshold
+                else [
+                    [float(v) for v in box]
+                    for box in ctc_word_boxes(line_bbox, text, cols, T, float(wh), float(b))
+                ]
+                for (text, conf, cols, T), line_bbox, wh, b in zip(
+                    decoded, boxes, pdf["wh_ratio"], pdf["bucket"]
                 )
-                line_bbox = np.asarray(
-                    [pdf["x1"].iloc[k], pdf["y1"].iloc[k], pdf["x2"].iloc[k], pdf["y2"].iloc[k]],
-                    dtype=np.float32,
-                )
-                if base["confidence"].iloc[k] < cfg.rec_score_threshold:
-                    # index-parity blanking zeroed the text — word boxes
-                    # from the unblanked decode must not leak through
-                    wb = []
-                else:
-                    wb = ctc_word_boxes(
-                        line_bbox, text, cols, T, float(pdf["wh_ratio"].iloc[k]), float(b)
-                    )
-                word_boxes.append([[float(v) for v in box] for box in wb])
-            base = base.copy()
-            base["word_boxes"] = word_boxes
-            yield base
+            ]
+            out = _rec_frame(pdf, decoded)
+            out["word_boxes"] = word_boxes
+            yield out
 
-    from .schemas import REC_WORDBOX_SCHEMA
-
-    return crops.mapInPandas(it, schema=REC_WORDBOX_SCHEMA)
+    return crops.mapInPandas(wordbox_iter, schema=REC_WORDBOX_SCHEMA)
 
 
 def detect_crops_df(docs: DataFrame, cfg: ExtractConfig) -> DataFrame:
@@ -281,35 +263,25 @@ def detect_crops_from_flat(
     media = spans_flat.where(
         (F.col("s.kind") == "media") & F.col("s.media_ref").isNotNull()
     ).select("doc_id", F.col("s.offset").alias("offset"), F.col("s.media_ref").alias("media_ref"))
-    with_payload = media_store is not None
-    if with_payload:
-        media = media.join(
-            media_store.select("media_ref", "payload"), "media_ref", "left"
-        ).where(F.col("payload").isNotNull())
-        if num_partitions:
-            # the join's post-shuffle partitioning is AQE-sized for its
-            # BYTES (a few MB of payloads coalesce to one partition),
-            # not for the decode+detect compute behind each row — spread
-            # to the pipeline's partition count before the UDF, exactly
-            # like the crop pool repartition downstream
-            from .partitioning import spread
-
-            media = spread(media, num_partitions, "media_ref")
-
-    def detect_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CROPS_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[tuple] = []
-            payloads = pdf["payload"] if with_payload else [None] * len(pdf)
-            for doc_id, offset, media_ref, payload in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"], payloads
-            ):
-                rows.extend(
-                    _detect_one_page(doc_id, offset, media_ref, cfg, payload=payload)
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(detect_iter, schema=CROPS_SCHEMA)
+    if media_store is not None:
+        media = (
+            media.join(media_store.select("media_ref", "payload"), "media_ref", "left")
+            .where(F.col("payload").isNotNull())
+            .select("doc_id", "offset", "media_ref", "payload")
+        )
+    # with a store, the join's post-shuffle partitioning is AQE-sized
+    # for its BYTES (a few MB of payloads coalesce to one partition),
+    # not for the decode+detect compute behind each row — spread to the
+    # pipeline's partition count before the UDF, like the crop pool
+    # repartition downstream
+    return python_stage(
+        media,
+        partial(_detect_one_page, cfg),
+        CROPS_SCHEMA,
+        "detect_iter",
+        parallelism=num_partitions if media_store is not None else None,
+        by=("media_ref",),
+    )
 
 
 def recognize_df(crops: DataFrame, cfg: ExtractConfig) -> DataFrame:
@@ -318,7 +290,7 @@ def recognize_df(crops: DataFrame, cfg: ExtractConfig) -> DataFrame:
     def rec_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
-                yield _recognize_chunk(pdf, cfg)
+                yield _rec_frame(pdf, _decode_crops(pdf, cfg))
 
     return crops.mapInPandas(rec_iter, schema=REC_SCHEMA)
 
@@ -368,30 +340,19 @@ def extract_spans(
     docs: DataFrame,
     cfg: ExtractConfig | None = None,
     num_partitions: int | None = None,
-    pooled: bool = True,
     persist_input: bool = True,
-    width_sorted: bool = False,
     media_store: DataFrame | None = None,
 ) -> DataFrame:
     """documents(doc_id, spans) → results(doc_id, spans) (RESULTS_SCHEMA).
 
-    pooled=True routes crops through a rebalancing shuffle (the scale
-    path); pooled=False fuses recognition into the detect task (no crop
-    shuffle).
+    Crops reach recognition through a rebalancing shuffle on (doc_id,
+    offset, det_idx), so one heavy document's crops spread over all
+    num_partitions tasks.
 
     media_store=(media_ref, payload:binary) sources pages from real PNG
     bytes via an equi-join instead of the synthetic renderer (see
     detect_crops_from_flat); output is identical because PNG is
     lossless (pinned by test_pipeline_golden).
-
-    width_sorted=True additionally sorts each crop partition by
-    (bucket, wh_ratio) before recognition — the reference's
-    wh-ratio-sorted batching (ocr.rs:802-831). With a real accelerator
-    model this pays for itself in padding savings; with the synthetic
-    per-crop decoder it only adds a blocking per-partition sort
-    (measured 3× recognize-stage wall at 32 cores), and results are
-    identical either way (per-crop bucketed widths), so it defaults
-    off.
 
     The DAG fans the input into three branches (pass-through text,
     media detection, doc-id preservation). To scan the source exactly
@@ -402,8 +363,6 @@ def extract_spans(
     an Iceberg staging table at corpus scale) can pass
     persist_input=False."""
     from pyspark import StorageLevel
-
-    from .partitioning import spread
 
     cfg = cfg or ExtractConfig()
     P = num_partitions or spark.sparkContext.defaultParallelism
@@ -430,11 +389,7 @@ def extract_spans(
 
     crops = detect_crops_from_flat(
         spans_flat, cfg, media_store=media_store, num_partitions=P
-    )
-    if pooled:
-        crops = crops.repartition(P, "doc_id", "offset", "det_idx")
-        if width_sorted:
-            crops = crops.sortWithinPartitions("bucket", "wh_ratio")
+    ).repartition(P, "doc_id", "offset", "det_idx")
     rec = recognize_df(crops, cfg)
 
     media_results = (

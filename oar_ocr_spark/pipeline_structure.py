@@ -1,6 +1,6 @@
 """Spark structure-analysis DAG (the PP-StructureV3 track).
 
-    documents → explode media spans → [structure mapInPandas]
+    documents → explode media spans → [structure_iter Python stage]
       → (doc_id, offset, media_ref, elements:array<struct>, markdown)
 
 Unlike the OCR track, structure analysis is page-local end-to-end
@@ -9,20 +9,18 @@ page after batched model phases), so the whole per-page graph — layout
 detect → postprocess → overall OCR → matching → text join → enhanced
 reading order → markdown — runs fused in one Python boundary; only
 small result rows cross back. Heavy-document skew is handled upstream
-by the repartition on (doc_id, offset) row granularity: one task never
+by the spread on (doc_id, offset) row granularity: one task never
 owns more than its hash share of *pages* regardless of per-doc fan-out.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .local_ref import ExtractConfig
+from .partitioning import python_stage
 
 __all__ = ["STRUCTURE_SCHEMA", "extract_structure", "document_markdown"]
 
@@ -126,6 +124,8 @@ def extract_structure(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """documents(doc_id, spans) → one structure row per media span."""
+    from .structure import structure_page_record
+
     cfg = cfg or ExtractConfig()
     P = num_partitions or spark.sparkContext.defaultParallelism
     media = (
@@ -136,47 +136,32 @@ def extract_structure(
             F.col("s.offset").alias("offset"),
             F.col("s.media_ref").alias("media_ref"),
         )
-        .repartition(P, "doc_id", "offset")
     )
 
-    def structure_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .structure import structure_page_record
+    def structure_row(doc_id: str, offset: int, media_ref: str) -> list[tuple]:
+        els, markdown, html, p_start, p_end = structure_page_record(media_ref, cfg)
+        elements = [
+            (
+                e.element_type,
+                e.text,
+                e.html,
+                float(e.score),
+                int(e.order_index),
+                int(e.num_lines),
+                float(e.bbox[0]),
+                float(e.bbox[1]),
+                float(e.bbox[2]),
+                float(e.bbox[3]),
+            )
+            for e in els
+        ]
+        return [(doc_id, int(offset), media_ref, elements, markdown, html, p_start, p_end)]
 
-        cols = [f.name for f in STRUCTURE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for doc_id, offset, media_ref in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"]
-            ):
-                els, markdown, html, p_start, p_end = structure_page_record(
-                    media_ref, cfg
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        int(offset),
-                        media_ref,
-                        [
-                            (
-                                e.element_type,
-                                e.text,
-                                e.html,
-                                float(e.score),
-                                int(e.order_index),
-                                int(e.num_lines),
-                                float(e.bbox[0]),
-                                float(e.bbox[1]),
-                                float(e.bbox[2]),
-                                float(e.bbox[3]),
-                            )
-                            for e in els
-                        ],
-                        markdown,
-                        html,
-                        p_start,
-                        p_end,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(structure_iter, schema=STRUCTURE_SCHEMA)
+    return python_stage(
+        media,
+        structure_row,
+        STRUCTURE_SCHEMA,
+        "structure_iter",
+        parallelism=P,
+        by=("doc_id", "offset"),
+    )

@@ -13,7 +13,7 @@ page are mapped back through rotate_back_to_original
 (geometry.rs:848-886), exactly as the reference draws them.
 
 Everything is distributed: annotation runs as one Arrow-batched
-mapInPandas over media refs (pages never reach the driver), and all
+Python stage over media refs (pages never reach the driver), and all
 three sinks are ordinary DataFrame writes an Iceberg deployment would
 point at its tables.
 """
@@ -21,15 +21,14 @@ point at its tables.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .local_ref import ExtractConfig
+from .partitioning import python_stage
 
 __all__ = ["BOX_OUTLINE", "annotate_page", "annotated_pages_df", "save_results"]
 
@@ -89,18 +88,11 @@ def annotated_pages_df(
     """(media_ref) → (media_ref, annotated_png, width, height, n_boxes)."""
     cfg = cfg or ExtractConfig()
 
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"]:
-                png, w, h, n = annotate_page(ref, cfg)
-                rows.append((ref, png, w, h, n))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _ANNOTATED_SCHEMA.fields]
-            )
-
-    return refs.select(F.col(ref_col).alias("media_ref")).mapInPandas(
-        it, schema=_ANNOTATED_SCHEMA
+    return python_stage(
+        refs.select(F.col(ref_col).alias("media_ref")),
+        lambda ref: [(ref, *annotate_page(ref, cfg))],
+        _ANNOTATED_SCHEMA,
+        "annotated_pages",
     )
 
 

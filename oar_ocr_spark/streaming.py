@@ -71,9 +71,9 @@ def extract_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = extract_spans(
-            batch_df.sparkSession, batch_df, cfg, persist_input=True
-        )
+        # the micro-batch is a file scan: re-reading it per branch is
+        # cheap, and a persisted copy per batch would outlive the query
+        out = extract_spans(batch_df.sparkSession, batch_df, cfg, persist_input=False)
         write_batch_idempotent(out, results_path, batch_id)
 
     writer = stream.writeStream.foreachBatch(process_batch).option(

@@ -25,6 +25,10 @@ def corpus_df(spark):
     return docs_df(spark, generate_documents(60, seed=21))
 
 
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def _files(bucket_dir):
     return {
         name: os.stat(os.path.join(bucket_dir, name)).st_mtime_ns
@@ -35,12 +39,15 @@ def _files(bucket_dir):
 def test_resume_skips_completed_buckets(spark, corpus_df, tmp_path):
     results = tmp_path / "results"
     lineage = tmp_path / "lineage"
+    spark.catalog.clearCache()
     # first run dies after 3 committed buckets: one batch of 6 buckets
     # lands whole, so buckets 3..5 are on disk but uncommitted
     with pytest.raises(RuntimeError, match="injected failure"):
         run_extraction_job(
             spark, corpus_df, str(results), str(lineage), n_buckets=6, fail_after_bucket=3
         )
+    # a long-lived session keeps no cached copy of any batch's input
+    assert _cache_empty(spark)
     assert read_lineage(spark, str(lineage)).count() == 3
     assert sorted(os.listdir(lineage)) == [f"bucket_complete-{b}.json" for b in range(3)]
     # each bucket lands as one file, written by one task
@@ -56,6 +63,7 @@ def test_resume_skips_completed_buckets(spark, corpus_df, tmp_path):
     # resume: completes only the remaining buckets
     summary = run_extraction_job(spark, corpus_df, str(results), str(lineage), n_buckets=6)
     assert summary == {"processed_buckets": 3, "skipped_buckets": 3, "n_buckets": 6}
+    assert _cache_empty(spark)
     lin = read_lineage(spark, str(lineage))
     assert lin.count() == 6
     # all docs present exactly once in the results

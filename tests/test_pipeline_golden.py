@@ -63,14 +63,6 @@ def test_partition_invariance(spark, corpus):
     assert a == b
 
 
-def test_pooled_and_fused_paths_agree(spark, corpus):
-    docs = corpus[:30]
-    df = docs_df(spark, docs)
-    a = collect_spans(extract_spans(spark, df, pooled=True))
-    b = collect_spans(extract_spans(spark, df, pooled=False))
-    assert a == b
-
-
 def test_doc_with_no_output_spans_kept(spark):
     docs = [{"doc_id": "empty1", "spans": []}]
     df = docs_df(spark, docs)

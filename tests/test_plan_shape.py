@@ -37,6 +37,11 @@ def test_extraction_plan_two_python_boundaries_and_pruned_scan(spark, tmp_path):
 
     boundaries = re.findall(r"\(\d+\) MapInPandas", plan)
     assert len(boundaries) == 2, plan
+    # each boundary is a named plan node, so SQL metrics attribute to
+    # its stage (perfbench's layer metrics match these names)
+    physical = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas detect_iter(" in physical, physical
+    assert "MapInPandas rec_iter(" in physical, physical
     # the doc-id preservation branch scans doc_id ONLY (column pruning
     # reaches the parquet scan)
     assert "ReadSchema: struct<doc_id:string>" in plan, plan
@@ -143,3 +148,39 @@ def test_decontaminate_broadcasts_the_benchmark_side(spark, tmp_path):
     assert "BroadcastHashJoin" in plan, plan
     # the count aggregation is map-side combinable
     assert "partial_count" in plan, plan
+
+
+# the batch-vectorized kernels that need a whole Arrow batch at once;
+# every other Python stage goes through partitioning.python_stage
+_BATCH_KERNELS = {
+    ("partitioning.py", "python_stage"),
+    ("pipeline.py", "recognize_df"),
+    ("pipeline.py", "recognize_with_word_boxes"),
+    ("functions/dedup.py", "simhash_df"),
+    ("functions/similarity.py", "knn_bruteforce"),
+    ("functions/similarity.py", "knn_self_join"),
+    ("functions/similarity.py", "lsh_bucket_df"),
+    ("streaming.py", "dedup_stream"),
+}
+
+
+def test_python_stages_go_through_the_seam():
+    import ast
+    from pathlib import Path
+
+    import oar_ocr_spark
+
+    root = Path(oar_ocr_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr.startswith(("mapInPandas", "applyInPandas"))
+                ):
+                    name = getattr(top, "name", "<module>")
+                    found.add((path.relative_to(root).as_posix(), name))
+    assert found == _BATCH_KERNELS

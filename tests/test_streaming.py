@@ -23,9 +23,12 @@ def test_stream_extracts_and_resumes(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     docs = generate_documents(16, seed=33)
     _write_docs(spark, docs[:8], inp)
+    spark.catalog.clearCache()
 
     q = extract_stream(spark, inp, out, ckpt)
     q.awaitTermination(120)
+    # no micro-batch leaves a cached copy of its input behind
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     got1 = spark.read.parquet(out)
     assert got1.select("doc_id").distinct().count() == 8
 

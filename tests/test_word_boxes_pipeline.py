@@ -43,3 +43,55 @@ def test_word_boxes_blanked_with_text(spark):
     for r in rows:
         assert r["text"] == ""
         assert r["word_boxes"] == []
+
+
+def _reference(row, cfg):
+    """One crop decoded on its own: the single-row CTC collapse plus
+    ctc_word_boxes, with the stage's score-threshold blanking."""
+    import zlib
+
+    from oar_ocr_spark.models.synthetic import CHAR_BASE, VOCAB, classify_line_orientation
+    from oar_ocr_spark.operators.ctc import ctc_collapse_batch, ctc_word_boxes
+    from oar_ocr_spark.pipeline import _decode_row_for_crop
+
+    crop = np.frombuffer(zlib.decompress(row["crop"]), dtype=np.uint8).reshape(
+        row["crop_h"], row["crop_w"]
+    )
+    if cfg.use_line_orientation and classify_line_orientation(crop) == 1:
+        crop = crop[::-1, ::-1]
+    idx = _decode_row_for_crop(crop, cfg.rec_target_h, row["bucket"]).astype(np.int32) - CHAR_BASE
+    idx = np.where((idx >= 1) & (idx < len(VOCAB)), idx, 0)
+    prob = np.where(idx > 0, np.float32(0.95), np.float32(0.05))
+    [(text, conf, cols, T)] = ctc_collapse_batch(idx[None, :], prob[None, :], VOCAB)
+    if conf < cfg.rec_score_threshold:
+        return "", np.float32(conf), []
+    bbox = np.asarray([row["x1"], row["y1"], row["x2"], row["y2"]], dtype=np.float32)
+    wb = ctc_word_boxes(bbox, text, cols, T, float(row["wh_ratio"]), float(row["bucket"]))
+    return text, np.float32(conf), np.asarray(wb, dtype=np.float32).tolist()
+
+
+@pytest.mark.parametrize("threshold", [0.0, 0.99])
+def test_word_boxes_match_per_crop_reference(spark, threshold):
+    from oar_ocr_spark.pipeline import recognize_df
+
+    docs = [(f"wbr{d}", [("media", None, f"wbr{d}_m", 0)]) for d in range(4)]
+    df = spark.createDataFrame(docs, schema=DOCUMENTS_SCHEMA)
+    cfg = ExtractConfig(rec_score_threshold=threshold)
+    crops = detect_crops_df(df, cfg).localCheckpoint()
+    key = ("doc_id", "offset", "det_idx")
+    ref = {tuple(r[k] for k in key): _reference(r, cfg) for r in crops.collect()}
+    got = {
+        tuple(r[k] for k in key): (
+            r["text"],
+            np.float32(r["confidence"]),
+            np.asarray(r["word_boxes"], dtype=np.float32).tolist(),
+        )
+        for r in recognize_with_word_boxes(crops, cfg).collect()
+    }
+    assert len(ref) >= 5
+    assert got == ref
+    plain = {
+        tuple(r[k] for k in key): (r["text"], np.float32(r["confidence"]))
+        for r in recognize_df(crops, cfg).collect()
+    }
+    assert plain == {k: v[:2] for k, v in ref.items()}
