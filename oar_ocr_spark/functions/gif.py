@@ -9,8 +9,10 @@ the public GIF89a specification:
 - decoder: GIF87a/GIF89a headers, global + local color tables,
   the 4-pass row interlace, LZW image data (LSB-first variable-width
   codes, per-image minimum code size, clear/EOI codes, deferred-clear
-  streams), Graphic Control Extension transparency (composited over
-  WHITE — the document-background convention shared with png.py), and
+  streams; decoded by the LZW kernel shared with TIFF and PDF,
+  functions/lzw.py), Graphic Control Extension transparency
+  (composited over WHITE — the document-background convention shared
+  with png.py), and
   all four frame disposal methods (none/keep composite onto the
   logical screen, restore-to-background clears the frame's region to
   WHITE, restore-previous rewinds to the pre-frame composite;
@@ -35,6 +37,7 @@ import struct
 import numpy as np
 
 from .codec_guard import loud_decode
+from .lzw import lzw_decode
 
 __all__ = ["encode_gif", "decode_gif", "decode_gif_frames", "GIF_MAGIC"]
 
@@ -133,64 +136,6 @@ def encode_gif(
 # decoder
 # ---------------------------------------------------------------------------
 
-def _lzw_decode_gif(data: bytes, min_code: int, n_pixels: int) -> np.ndarray:
-    """GIF LZW: LSB-first variable-width codes, dynamic table 2^min..
-    4096, clear resets, EOI ends. Returns exactly n_pixels indices."""
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    out = np.empty(n_pixels, dtype=np.uint8)
-    n_out = 0
-
-    def reset():
-        return [bytes([i]) for i in range(1 << min_code)] + [b"", b""], min_code + 1
-
-    table, width = reset()
-    prev: bytes | None = None
-    acc = 0
-    nbits = 0
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                table, width = reset()
-                prev = None
-                continue
-            if code == eoi:
-                if n_out != n_pixels:
-                    raise ValueError(
-                        f"GIF LZW ended early: {n_out}/{n_pixels} pixels"
-                    )
-                return out
-            if prev is None:
-                if code >= len(table):
-                    raise ValueError(f"bad first GIF LZW code {code}")
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                if len(table) < 4096:
-                    table.append(prev + entry[:1])
-            elif code == len(table):
-                entry = prev + prev[:1]
-                if len(table) < 4096:
-                    table.append(entry)
-            else:
-                raise ValueError(f"GIF LZW code {code} beyond table")
-            if n_out + len(entry) > n_pixels:
-                raise ValueError("GIF LZW produced too many pixels")
-            out[n_out : n_out + len(entry)] = np.frombuffer(entry, dtype=np.uint8)
-            n_out += len(entry)
-            prev = entry
-            # widen AFTER appending; cap at 12 bits (spec)
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-    if n_out != n_pixels:
-        raise ValueError(f"GIF LZW stream exhausted: {n_out}/{n_pixels} pixels")
-    return out
-
-
 @loud_decode("GIF")
 def decode_gif_frames(data: bytes, limit: int | None = None) -> list[np.ndarray]:
     """GIF bytes → list of (H,W,3) uint8 frames composited onto the
@@ -253,7 +198,7 @@ def decode_gif_frames(data: bytes, limit: int | None = None) -> list[np.ndarray]
                 break
             lzw += data[pos : pos + n]
             pos += n
-        idx = _lzw_decode_gif(bytes(lzw), min_code, iw * ih).reshape(ih, iw)
+        idx = lzw_decode(bytes(lzw), min_code, lsb_first=True, early_change=0, limit=iw * ih).reshape(ih, iw)
         if iflags & 0x40:  # interlaced: rows arrive in pass order
             ordered = np.empty_like(idx)
             ordered[_interlaced_row_order(ih)] = idx

@@ -77,11 +77,12 @@ def _decode_payload(
     """Codec seam (load_image / load_image_from_memory,
     oar-ocr-core/src/utils/image.rs:65-88).
 
-    With a binary payload, real PNG bytes decode through the pure-numpy
-    codec (functions/png.py — lossless), real JPEG bytes through
-    functions/jpeg.py (lossy; q=100 measured span-preserving,
-    test_jpeg.py), and real GIF bytes through functions/gif.py
-    (old-web crawl images). Audio/video payloads have their own real-format
+    With a binary payload, the magic bytes pick the codec: PNG
+    (functions/png.py — lossless), JPEG (functions/jpeg.py — lossy;
+    q=100 measured span-preserving, test_jpeg.py), GIF
+    (functions/gif.py), TIFF (functions/tiff.py), BMP
+    (functions/bmp.py), JPEG 2000 (functions/jp2.py) and standalone
+    JBIG2 (functions/jbig2.py). Audio/video payloads have their own real-format
     operators (functions/wav.py PCM WAV, functions/avi.py AVI-MJPEG);
     byte formats none of these cover raise the declared
     NotImplementedError. Without a payload, synthetic refs decode via

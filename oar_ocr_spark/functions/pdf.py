@@ -85,6 +85,7 @@ from pyspark.sql import types as T
 from ..partitioning import python_stage
 
 from .codec_guard import loud_decode
+from .lzw import lzw_decode
 
 __all__ = [
     "encode_pdf",
@@ -1471,54 +1472,6 @@ def _rle_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _lzw_decode(data: bytes, early: int = 1) -> bytes:
-    """/LZWDecode (spec 7.4.4): 9→12-bit variable codes MSB-first,
-    256 = clear table, 257 = EOD; /EarlyChange (default 1) widens the
-    code one entry before the table fills — the layout every PDF
-    writer uses."""
-    out = bytearray()
-    table: list[bytes] = []
-
-    def reset():
-        nonlocal table, width
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-
-    width = 9
-    reset()
-    prev: bytes | None = None
-    acc = 0
-    nbits = 0
-    for byte in data:
-        acc = (acc << 8) | byte
-        nbits += 8
-        while nbits >= width:
-            code = (acc >> (nbits - width)) & ((1 << width) - 1)
-            nbits -= width
-            acc &= (1 << nbits) - 1
-            if code == 256:
-                reset()
-                prev = None
-                continue
-            if code == 257:
-                return bytes(out)
-            if prev is None:
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise ValueError(f"LZW code {code} beyond table")
-            out += entry
-            prev = entry
-            if len(table) + early >= (1 << width) and width < 12:
-                width += 1
-    return bytes(out)
-
-
 def _apply_one_filter(name: str, data: bytes, pm) -> bytes:
     """One /Filter stage + its /DecodeParms (predictors apply to the
     LZW/Flate stages per spec 7.4.4.4)."""
@@ -1526,7 +1479,7 @@ def _apply_one_filter(name: str, data: bytes, pm) -> bytes:
         data = zlib.decompress(data)
     elif name == "LZWDecode":
         early = int(pm.get("EarlyChange", 1)) if isinstance(pm, dict) else 1
-        data = _lzw_decode(data, early)
+        data = lzw_decode(data, early_change=early).tobytes()
     elif name == "ASCIIHexDecode":
         return _ascii_hex_decode(data)
     elif name == "ASCII85Decode":

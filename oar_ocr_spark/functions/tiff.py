@@ -8,11 +8,11 @@ against the public TIFF 6.0 specification:
 - decoder: both byte orders (II/MM), the IFD chain (multi-page files
   via `decode_tiff_pages`; `decode_tiff` returns the first page),
   strip layout (any RowsPerStrip), compressions none (1), LZW (5 —
-  TIFF LZW is the same MSB-first early-change scheme PDF uses, so the
-  decoder is functions/pdf._lzw_decode), Adobe Deflate (official 8
-  AND the legacy 32946 code — zlib per strip/tile, the modern-writer
-  default), PackBits (32773, where
-  0x80 is a NO-OP rather than PDF's EOD), and the CCITT fax family —
+  TIFF LZW is the same MSB-first early-change scheme PDF uses, decoded
+  by the LZW kernel shared with PDF and GIF, functions/lzw.py), Adobe
+  Deflate (official 8 AND the legacy 32946 code — zlib per strip/tile,
+  the modern-writer default), PackBits (32773, where 0x80 is a NO-OP
+  rather than PDF's EOD), and the CCITT fax family —
   2 (Modified Huffman), 3 (Group 3 per T4Options: 1D/2D, byte-aligned
   EOLs) and 4 (Group 4 / MMR), each strip independently coded, with
   FillOrder 2 bit reversal (functions/ccitt.py holds the T.4/T.6
@@ -64,6 +64,7 @@ import struct
 import numpy as np
 
 from .codec_guard import loud_decode
+from .lzw import lzw_decode
 
 __all__ = [
     "encode_tiff",
@@ -164,9 +165,7 @@ def _block_to_packed(
     width × nrows pixels)."""
     rowbytes = (width * spp * depth + 7) // 8
     if comp == 5:
-        from .pdf import _lzw_decode  # TIFF LZW == PDF LZW (MSB-first)
-
-        block = _lzw_decode(block)
+        block = lzw_decode(block).tobytes()  # MSB-first, EarlyChange 1
     elif comp in (8, 32946):
         # Adobe Deflate (official 8, legacy 32946): zlib per block —
         # the modern-writer default (GDAL/ImageMagick)

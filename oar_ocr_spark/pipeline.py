@@ -70,8 +70,12 @@ def _detect_one_page(
     perspective crop) follows cfg.text_type via
     local_ref.detect_and_crop — the same function the golden generator
     calls. With a binary payload (media_store mode) the page decodes
-    from real PNG bytes (functions/multimodal._decode_payload); PNG is
-    lossless so results are identical to the render path."""
+    from real bytes: functions/multimodal._decode_payload dispatches on
+    magic bytes to the PNG, JPEG, GIF, TIFF, BMP, JP2 and JBIG2 codecs.
+    Results equal the render path only when those bytes hold the page
+    losslessly (PNG, and the grey GIF/TIFF/BMP of legacy_store_df,
+    pinned by test_pipeline_golden); JPEG pages and thresholded fax
+    pages decode to different pixels."""
     from .local_ref import detect_and_crop
 
     import zlib
@@ -257,7 +261,9 @@ def detect_crops_from_flat(
     from the synthetic renderer to real encoded bytes: media spans
     equi-join their payload on media_ref (the natural shape for an
     Iceberg media side table — hash join, AQE-sized) and the detect UDF
-    decodes via the PNG codec. Spans whose ref is missing from the
+    decodes each payload by its magic bytes (see _detect_one_page for
+    the formats, and for when the output equals the render path).
+    Spans whose ref is missing from the
     store are dropped (left join + null guard), mirroring the
     malformed-row policy above."""
     media = spans_flat.where(
@@ -349,10 +355,12 @@ def extract_spans(
     offset, det_idx), so one heavy document's crops spread over all
     num_partitions tasks.
 
-    media_store=(media_ref, payload:binary) sources pages from real PNG
-    bytes via an equi-join instead of the synthetic renderer (see
-    detect_crops_from_flat); output is identical because PNG is
-    lossless (pinned by test_pipeline_golden).
+    media_store=(media_ref, payload:binary) sources pages from real
+    encoded bytes (PNG, JPEG, GIF, TIFF, BMP, JP2 or JBIG2, by magic
+    bytes) via an equi-join instead of the synthetic renderer (see
+    detect_crops_from_flat). Output equals the render path only for
+    pages stored losslessly (PNG and the grey GIF/TIFF/BMP stores,
+    pinned by test_pipeline_golden), not for JPEG or thresholded pages.
 
     The DAG fans the input into three branches (pass-through text,
     media detection, doc-id preservation). To scan the source exactly

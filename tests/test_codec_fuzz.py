@@ -12,7 +12,9 @@ below the header layer legitimately decodes.
 """
 
 import random
+import struct
 
+import numpy as np
 import pytest
 
 from oar_ocr_spark.fixtures.render import render_page
@@ -131,6 +133,52 @@ def test_legacy_image_fuzz(page):
         decode_tiff,
         trials=100,
     )
+
+
+def _gif_container(idx: np.ndarray, bits: int, stream: bytes, interlace: bool) -> bytes:
+    """Single-image GIF around an LZW stream coded from `idx` with a
+    grey palette of 2^bits entries."""
+    h, w = idx.shape
+    pal = np.repeat(np.linspace(0, 255, 1 << bits).astype(np.uint8)[:, None], 3, axis=1)
+    out = b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
+    out += pal.tobytes()
+    out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + bytes([0x40 if interlace else 0])
+    out += bytes([max(bits, 2)])
+    for i in range(0, len(stream), 255):
+        out += bytes([len(stream[i : i + 255])]) + stream[i : i + 255]
+    return out + b"\x00\x3b"
+
+
+def test_lzw_stream_fuzz(page):
+    """Dictionary-compressed LZW (multi-byte entries, KwKwK codes,
+    deferred clears), which the literal-code fixture encoders never
+    write, through the GIF and TIFF decoders."""
+    from oar_ocr_spark.functions.gif import _interlaced_row_order, decode_gif
+    from oar_ocr_spark.functions.tiff import decode_tiff
+    from tests.test_lzw import lzw_encode
+    from tests.test_tiff import _strip_le
+
+    page = np.asarray(page)
+    gifs = []
+    for bits, interlace, full_codes in [(8, False, 0), (4, True, None), (1, False, 2000)]:
+        idx = page >> (8 - bits)
+        rows = idx[_interlaced_row_order(len(idx))] if interlace else idx
+        stream = lzw_encode(rows.tobytes(), max(bits, 2), True, 0, full_codes)
+        gifs.append(_gif_container(idx, bits, stream, interlace))
+        assert (decode_gif(gifs[-1])[:, :, 0] == (idx * (255 // ((1 << bits) - 1)))).all()
+    _fuzz(gifs, decode_gif, trials=100)
+
+    h, w = page.shape
+    diff = page.astype(np.int16)
+    diff[:, 1:] = (page[:, 1:].astype(np.int16) - page[:, :-1]) % 256
+    predictor = ((317, 3, 1, struct.pack("<H", 2)),)
+    tiffs = [
+        _strip_le(w, h, lzw_encode(page.tobytes()), comp=5),
+        _strip_le(w, h, lzw_encode(diff.astype(np.uint8).tobytes()), comp=5, extra_tags=predictor),
+    ]
+    for data in tiffs:
+        assert (decode_tiff(data) == page).all()
+    _fuzz(tiffs, decode_tiff, trials=100)
 
 
 def test_pdf_fuzz(page):

@@ -313,7 +313,7 @@ class TestForeignPdfs:
         # input (EEEEEeEEEf): CLEAR, E, EE, EE, e, EEE, f, EOD — i.e.
         # codes 256,69,258,258,101,259,102,257 at 9 bits (the third
         # code reuses table entry 258 added while coding the second)
-        from oar_ocr_spark.functions.pdf import _lzw_decode
+        from oar_ocr_spark.functions.lzw import lzw_decode
 
         codes = [256, 69, 258, 258, 101, 259, 102, 257]
         acc = 0
@@ -327,7 +327,7 @@ class TestForeignPdfs:
                 nbits -= 8
         if nbits:
             out.append((acc << (8 - nbits)) & 0xFF)
-        assert _lzw_decode(bytes(out)) == b"\x45" * 5 + b"\x65" + b"\x45" * 3 + b"\x66"
+        assert lzw_decode(bytes(out)).tobytes() == b"\x45" * 5 + b"\x65" + b"\x45" * 3 + b"\x66"
 
     def test_runlength_vectors(self):
         from oar_ocr_spark.functions.pdf import _rle_decode
@@ -513,7 +513,8 @@ class TestForeignPdfs:
 
     def test_lzw_with_png_predictor_stream(self):
         # LZW + /Predictor 12: the pre-Flate layout old PDF writers used
-        from oar_ocr_spark.functions.pdf import _apply_stream_filters, _lzw_decode
+        from oar_ocr_spark.functions.lzw import lzw_decode
+        from oar_ocr_spark.functions.pdf import _apply_stream_filters
 
         rows = np.arange(21, dtype=np.uint8).reshape(3, 7)
         pred = np.zeros((3, 8), dtype=np.uint8)
@@ -555,7 +556,7 @@ class TestForeignPdfs:
             "Filter": "LZWDecode",
             "DecodeParms": {"Predictor": 12, "Columns": 7},
         }
-        assert _lzw_decode(bytes(out)) == raw
+        assert lzw_decode(bytes(out)).tobytes() == raw
         assert _apply_stream_filters(d, bytes(out)) == rows.tobytes()
 
     def test_startxref_at_junk_raises(self):
