@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import spread
+
 __all__ = [
     "exact_dedup",
     "shingle_df",
@@ -86,8 +88,6 @@ def minhash_band_hashes(
     """
     rows_per_band = n_hashes // n_bands
     if parallelism:
-        from ..partitioning import spread
-
         df = spread(df, parallelism, "doc_id")
     sh = shingle_df(df, text_col, k)
     seeds = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("seed")
@@ -156,8 +156,6 @@ def ngram_jaccard_pairs(
     only in the final projection) so the predicate matches the SQL
     oracle's exactly."""
     if parallelism:
-        from ..partitioning import spread
-
         df = spread(df, parallelism, "doc_id")
     sh_all = shingle_df(df, text_col, k)
     heavy = (
@@ -232,8 +230,6 @@ def decontaminate_df(
     )
     bench = shingle_df(bench_txt, text_col, k).select("sh").distinct()
     if parallelism:
-        from ..partitioning import spread
-
         df = spread(df, parallelism, "doc_id")
     corpus = shingle_df(df, text_col, k)
     return (
@@ -311,20 +307,20 @@ def simhash_df(
 ) -> DataFrame:
     """doc_id, simhash (int64) via an Arrow-batched pandas UDF.
 
-    parallelism: optionally round-robin-repartition the input first —
-    a small single-file parquet arrives as ONE scan partition, leaving
-    every other worker idle through the UDF stage. At corpus scale the
-    scan already yields many partitions; leave None there (no extra
-    shuffle)."""
+    parallelism: optionally spread the input round-robin first
+    (partitioning.spread) — a small single-file parquet arrives as ONE
+    scan partition, leaving every other worker idle through the UDF
+    stage. At corpus scale the scan already yields many partitions;
+    leave None there (no extra shuffle)."""
 
-    def it(batches):
+    def simhash_iter(batches):
         for pdf in batches:
             yield _simhash_batch(pdf["doc_id"], pdf[text_col])
 
     src = df.select(F.col("doc_id").cast("string").alias("doc_id"), text_col)
     if parallelism:
-        src = src.repartition(parallelism)
-    return src.mapInPandas(it, schema=_SIMHASH_SCHEMA)
+        src = spread(src, parallelism)
+    return src.mapInPandas(simhash_iter, schema=_SIMHASH_SCHEMA)
 
 
 def simhash_candidates(sim: DataFrame, max_hamming: int = 3) -> DataFrame:

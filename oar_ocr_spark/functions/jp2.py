@@ -1479,67 +1479,6 @@ def _read_layer_packet(
     return pos
 
 
-def _read_packet(
-    data: bytes, pos: int, grids: list, sop: bool = False, eph: bool = False
-) -> tuple[list, int]:
-    """Mirror of _write_packet → ([(included, zbp, npasses, bytes)] per
-    band, next position). `sop`/`eph` consume the COD-signalled resync
-    markers (the SOP sequence number is not validated — encoders
-    disagree on per-tile vs per-codestream numbering)."""
-    if sop:
-        marker, lsop = struct.unpack(">HH", data[pos : pos + 4])
-        if marker != 0xFF91 or lsop != 4:
-            raise ValueError(f"expected SOP marker before packet at {pos}")
-        pos += 6
-    br = _HeaderBitReader(data, pos)
-    if br.read() == 0:
-        # empty packet: every code-block of every band is not included
-        # (an all-zero resolution — constant tiles hit this)
-        pos = br.align()
-        if eph:
-            if data[pos : pos + 2] != struct.pack(">H", 0xFF92):
-                raise ValueError(f"expected EPH marker after packet header at {pos}")
-            pos += 2
-        return [
-            [(False, 0, 0, None)] * (rows * cols) for rows, cols in grids
-        ], pos
-    per_band = []
-    lengths = []
-    for rows, cols in grids:
-        blks = []
-        if rows and cols:
-            incl_tree = _TagTree(rows, cols)
-            zbp_tree = _TagTree(rows, cols)
-            for i in range(rows):
-                for j in range(cols):
-                    if not incl_tree.decode(br, i, j, 1):
-                        blks.append((False, 0, 0, None))
-                        continue
-                    k = 1
-                    while not zbp_tree.decode(br, i, j, k):
-                        k += 1
-                    zbp = k - 1
-                    npasses = _read_npasses(br)
-                    extra = 0
-                    while br.read():
-                        extra += 1
-                    lbits = npasses.bit_length() - 1
-                    ln = br.read_bits(3 + extra + lbits)
-                    blks.append((True, zbp, npasses, ln))
-                    lengths.append((len(per_band), len(blks) - 1, ln))
-        per_band.append(blks)
-    pos = br.align()
-    if eph:
-        if data[pos : pos + 2] != struct.pack(">H", 0xFF92):
-            raise ValueError(f"expected EPH marker after packet header at {pos}")
-        pos += 2
-    for bi, ki, ln in lengths:
-        incl, zbp, npasses, _ = per_band[bi][ki]
-        per_band[bi][ki] = (incl, zbp, npasses, data[pos : pos + ln])
-        pos += ln
-    return per_band, pos
-
-
 def _marker_seg(marker: int, body: bytes) -> bytes:
     return struct.pack(">HH", marker, len(body) + 2) + body
 

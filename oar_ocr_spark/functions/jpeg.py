@@ -945,24 +945,6 @@ def encode_jpeg_progressive(
 # lossless JPEG (T.81 Annex H, process SOF3)
 # ---------------------------------------------------------------------------
 
-def _lossless_predict(ra: int, rb: int, rc: int, sel: int) -> int:
-    """The seven Annex-H predictors (H.1.2.1); shifts are arithmetic
-    (python's >> on ints), i.e. floor division by 2."""
-    if sel == 1:
-        return ra
-    if sel == 2:
-        return rb
-    if sel == 3:
-        return rc
-    if sel == 4:
-        return ra + rb - rc
-    if sel == 5:
-        return ra + ((rb - rc) >> 1)
-    if sel == 6:
-        return rb + ((ra - rc) >> 1)
-    return (ra + rb) >> 1
-
-
 # canonical Huffman table covering the full lossless SSSS range 0..16
 # (the DCT tables stop at 11; H.2.2 needs 16 for deep-precision diffs)
 _DC_BITS_LL = [0, 1, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1]

@@ -97,13 +97,6 @@ _LEGAL_DEPTHS = {
 }
 
 
-def _unfilter(raw: np.ndarray, h: int, w: int, channels: int) -> np.ndarray:
-    """Reverse PNG row filters for 8-bit depth (the historical
-    signature — also the /Predictor seam pdf.py shares): raw is
-    (h, 1 + w*channels) uint8 with the filter byte in column 0."""
-    return _unfilter_bytes(raw, h, w * channels, channels)
-
-
 def _unfilter_bytes(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
     """Reverse PNG row filters on BYTE streams: raw is (h, 1 + stride)
     uint8 with the filter byte in column 0; bpp = bytes per pixel

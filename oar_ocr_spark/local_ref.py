@@ -83,13 +83,9 @@ class ExtractConfig:
     use_e2e_wireless_table_rec: bool = True
     use_wired_table_cells_trans_to_html: bool = False
     use_wireless_table_cells_trans_to_html: bool = False
-    # builder batch-size knobs (OAROCRBuilder, ocr.rs:159-181,262-274;
-    # validated 1..=4096, ocr.rs:93,419-430). In the Spark engine
-    # image_batch_size guides the detect-stage Arrow batch sizing
-    # (spark.sql.execution.arrow.maxRecordsPerBatch) and
-    # region_batch_size bounds the per-bucket stack the recognize UDF
-    # materializes at once.
-    image_batch_size: int = 8
+    # builder batch-size knob (OAROCRBuilder, ocr.rs:159-181,262-274;
+    # validated 1..=4096, ocr.rs:93,419-430): bounds the per-bucket
+    # stack the recognize UDF materializes at once.
     region_batch_size: int = 64
     postprocess: DBPostProcess = field(init=False)
 
@@ -120,10 +116,9 @@ class ExtractConfig:
         return cls(**kwargs)
 
     def __post_init__(self) -> None:
-        for name in ("image_batch_size", "region_batch_size"):
-            v = getattr(self, name)
-            if not (1 <= int(v) <= 4096):  # ocr.rs:93,419-430 bounds
-                raise ValueError(f"{name} must be in 1..=4096, got {v}")
+        v = self.region_batch_size
+        if not (1 <= int(v) <= 4096):  # ocr.rs:93,419-430 bounds
+            raise ValueError(f"region_batch_size must be in 1..=4096, got {v}")
         self.postprocess = DBPostProcess(
             thresh=self.det_thresh,
             box_thresh=self.det_box_thresh,

@@ -1,9 +1,10 @@
 """The Spark extraction DAG (SURVEY.md §7 target DAG).
 
-    documents(doc_id, spans)
-      │ spread(P, doc_id)                           -- xxhash64 exchange
-      ├─ text spans: explode(filter(kind='text'))   -- pure HOFs, no UDF
-      └─ media spans: explode(filter(kind='media'))
+    documents(doc_id, spans) → explode_outer(spans)
+      ├─ text spans: filter(kind='text')            -- pure Catalyst, no UDF
+      └─ media spans: filter(kind='media')
+           → spread(P, media_ref)                   -- the DAG's one xxhash64
+                                                       exchange, per page
            → [detect stage: detect_iter]            -- render→orient→mask→
              (doc_id, offset, media_ref,               resize→DB→sort→crop,
               det_idx, crop, wh_ratio, bucket)         one Python boundary
@@ -19,6 +20,11 @@ Design notes (scale rationale):
   cross the JVM↔Python boundary more than once, and only small crops
   enter the shuffle (the reference's zero-copy Arc<RgbImage> sharing,
   ocr.rs:565, has the same goal).
+- Data moves in front of the costly UDF, not in front of the document:
+  the only spread sits directly under detect_iter and hashes pages by
+  media_ref, so a heavy document's pages split across detect tasks and
+  an input that arrives as one partition (a single-file scan, or a
+  groupBy output AQE coalesced) still detects in P tasks.
 - The crop repartition is the distributed analog of the reference's
   *global crop pooling* (ocr.rs:594-634): a heavy many-region document
   fans its crops across all partitions (hash on (doc_id, offset,
@@ -47,7 +53,7 @@ from pyspark.sql import functions as F
 from .local_ref import ExtractConfig, bucket_ratio, preprocess_page
 from .models.synthetic import BG, CHAR_BASE, VOCAB, classify_line_orientation
 from .operators.ctc import ctc_collapse_batch, ctc_word_boxes
-from .partitioning import python_stage, spread
+from .partitioning import python_stage
 from .schemas import CROPS_SCHEMA, REC_SCHEMA, REC_WORDBOX_SCHEMA, RESULTS_SCHEMA
 
 __all__ = ["extract_spans", "detect_crops_df", "recognize_df", "assemble_results"]
@@ -265,7 +271,13 @@ def detect_crops_from_flat(
     the formats, and for when the output equals the render path).
     Spans whose ref is missing from the
     store are dropped (left join + null guard), mirroring the
-    malformed-row policy above."""
+    malformed-row policy above.
+
+    The pages are spread to num_partitions (default: the session's
+    defaultParallelism) by media_ref right before the detect UDF, on
+    both paths: neither the input's partitioning nor the payload join's
+    AQE-sized output (sized by BYTES, not by the decode+detect compute
+    behind each row) decides how many tasks detect."""
     media = spans_flat.where(
         (F.col("s.kind") == "media") & F.col("s.media_ref").isNotNull()
     ).select("doc_id", F.col("s.offset").alias("offset"), F.col("s.media_ref").alias("media_ref"))
@@ -275,17 +287,12 @@ def detect_crops_from_flat(
             .where(F.col("payload").isNotNull())
             .select("doc_id", "offset", "media_ref", "payload")
         )
-    # with a store, the join's post-shuffle partitioning is AQE-sized
-    # for its BYTES (a few MB of payloads coalesce to one partition),
-    # not for the decode+detect compute behind each row — spread to the
-    # pipeline's partition count before the UDF, like the crop pool
-    # repartition downstream
     return python_stage(
         media,
         partial(_detect_one_page, cfg),
         CROPS_SCHEMA,
         "detect_iter",
-        parallelism=num_partitions if media_store is not None else None,
+        parallelism=num_partitions or media.sparkSession.sparkContext.defaultParallelism,
         by=("media_ref",),
     )
 
@@ -351,9 +358,12 @@ def extract_spans(
 ) -> DataFrame:
     """documents(doc_id, spans) → results(doc_id, spans) (RESULTS_SCHEMA).
 
-    Crops reach recognition through a rebalancing shuffle on (doc_id,
-    offset, det_idx), so one heavy document's crops spread over all
-    num_partitions tasks.
+    Pages reach detection through the one spread on media_ref
+    (detect_crops_from_flat) and crops reach recognition through a
+    rebalancing shuffle on (doc_id, offset, det_idx), so one heavy
+    document's pages and crops spread over all num_partitions tasks.
+    The text branch runs no UDF and is not spread; the assembly groupBy
+    shuffles it by doc_id.
 
     media_store=(media_ref, payload:binary) sources pages from real
     encoded bytes (PNG, JPEG, GIF, TIFF, BMP, JP2 or JBIG2, by magic
@@ -375,13 +385,7 @@ def extract_spans(
     cfg = cfg or ExtractConfig()
     P = num_partitions or spark.sparkContext.defaultParallelism
 
-    # spread(), not repartition(P, "doc_id"): derived inputs arrive
-    # straight out of a groupBy("doc_id"), where a same-key repartition
-    # is planned away and AQE then coalesces the tiny upstream exchange
-    # to ONE partition — serializing the detect UDF (see partitioning.py)
-    spans_flat = spread(docs, P, "doc_id").select(
-        "doc_id", F.explode_outer("spans").alias("s")
-    )
+    spans_flat = docs.select("doc_id", F.explode_outer("spans").alias("s"))
     if persist_input:
         spans_flat = spans_flat.persist(StorageLevel.MEMORY_AND_DISK)
 

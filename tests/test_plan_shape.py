@@ -3,6 +3,7 @@ asserted here so a refactor cannot silently regress them."""
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -26,6 +27,35 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _hash_spreads(df) -> list[tuple[str, str]]:
+    """(key column, node right above) of every xxhash64 exchange — a
+    partitioning.spread — in df's executed plan (AQE's final plan once
+    df has run)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = [
+        line
+        for line in plan.split("== Initial Plan ==")[0].splitlines()
+        if "ShuffleQueryStage" not in line
+    ]
+    spreads = []
+    for above, line in zip(lines, lines[1:]):
+        m = re.search(r"Exchange hashpartitioning\(xxhash64\((\w+)#", line)
+        if m:
+            spreads.append((m.group(1), re.sub(r"^[\s:+\-*()\d]*", "", above).split("(")[0]))
+    return spreads
+
+
+def _detect_tasks_on_grouped_input(docs, media_store=None) -> int:
+    """Tasks that emit crops when detect runs on an input derived from
+    groupBy("doc_id") and coalesced to one partition — the shape in
+    which a same-key repartition is planned away and an unspread UDF
+    runs serially (partitioning.py)."""
+    derived = docs.groupBy("doc_id").agg(F.first("spans").alias("spans")).coalesce(1)
+    flat = derived.select("doc_id", F.explode_outer("spans").alias("s"))
+    crops = detect_crops_from_flat(flat, ExtractConfig(), media_store=media_store)
+    return crops.select(F.spark_partition_id()).distinct().count()
+
+
 def test_extraction_plan_two_python_boundaries_and_pruned_scan(spark, tmp_path):
     docs = _parquet_docs(spark, tmp_path, generate_documents(12, seed=9))
     out = extract_spans(spark, docs, persist_input=False)
@@ -33,8 +63,6 @@ def test_extraction_plan_two_python_boundaries_and_pruned_scan(spark, tmp_path):
     # exactly two Python boundaries: detect and recognize (formatted
     # explain lists each node once in the tree and once in the detail
     # section — count the numbered detail entries)
-    import re
-
     boundaries = re.findall(r"\(\d+\) MapInPandas", plan)
     assert len(boundaries) == 2, plan
     # each boundary is a named plan node, so SQL metrics attribute to
@@ -47,6 +75,11 @@ def test_extraction_plan_two_python_boundaries_and_pruned_scan(spark, tmp_path):
     assert "ReadSchema: struct<doc_id:string>" in plan, plan
     # no cartesian products anywhere in the extraction DAG
     assert "CartesianProduct" not in plan
+    # the DAG's one spread hashes pages by media_ref right under the
+    # detect UDF; no document-level (doc_id) spread
+    assert _hash_spreads(out) == [("media_ref", "MapInPandas detect_iter")], physical
+    P = spark.sparkContext.defaultParallelism
+    assert _detect_tasks_on_grouped_input(docs) == P
 
 
 def test_page_store_join_shuffles_above_broadcast_threshold(spark, tmp_path):
@@ -81,6 +114,12 @@ def test_page_store_join_shuffles_above_broadcast_threshold(spark, tmp_path):
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
     # and the shuffle join is correct: results equal the renderer path
     a = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in out.collect()}
+    # the store path spreads exactly where the render path does: by
+    # media_ref under the detect UDF, above the payload join whose
+    # output AQE sizes by bytes
+    assert _hash_spreads(out) == [("media_ref", "MapInPandas detect_iter")]
+    P = spark.sparkContext.defaultParallelism
+    assert _detect_tasks_on_grouped_input(docs, media_store=store) == P
     b = {
         r["doc_id"]: [tuple(s) for s in r["spans"]]
         for r in extract_spans(spark, docs, persist_input=False).collect()
@@ -164,7 +203,9 @@ _BATCH_KERNELS = {
 }
 
 
-def test_python_stages_go_through_the_seam():
+def _method_call_sites(match) -> set[tuple[str, str]]:
+    """(file, top-level definition) of every `.attr(` call in the
+    package whose attribute name satisfies ``match``."""
     import ast
     from pathlib import Path
 
@@ -179,8 +220,21 @@ def test_python_stages_go_through_the_seam():
                 if (
                     isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
-                    and node.func.attr.startswith(("mapInPandas", "applyInPandas"))
+                    and match(node.func.attr)
                 ):
                     name = getattr(top, "name", "<module>")
                     found.add((path.relative_to(root).as_posix(), name))
+    return found
+
+
+def test_python_stages_go_through_the_seam():
+    found = _method_call_sites(lambda a: a.startswith(("mapInPandas", "applyInPandas")))
     assert found == _BATCH_KERNELS
+
+
+def test_one_partitioning_policy():
+    # every spread goes through partitioning.spread; the only other
+    # repartition is the crop pool, which perfbench finds by its
+    # hashpartitioning(doc_id, offset, det_idx) text
+    found = _method_call_sites(lambda a: a == "repartition")
+    assert found == {("partitioning.py", "spread"), ("pipeline.py", "extract_spans")}

@@ -109,11 +109,9 @@ def test_batch_size_validation_bounds():
 
     from oar_ocr_spark.local_ref import ExtractConfig
 
-    with pytest.raises(ValueError, match="image_batch_size"):
-        ExtractConfig(image_batch_size=0)
     with pytest.raises(ValueError, match="region_batch_size"):
         ExtractConfig(region_batch_size=4097)
-    cfg = ExtractConfig(image_batch_size=1, region_batch_size=4096)
+    cfg = ExtractConfig(region_batch_size=4096)
     assert cfg.region_batch_size == 4096
 
 
