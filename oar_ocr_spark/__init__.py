@@ -9,10 +9,14 @@ documents::
               spans: array<struct<kind:string, text:string,
                                   media_ref:string, offset:int>>)
 
-Every neural stage runs as a batched Arrow/pandas UDF over stacked
-image tensors (never per-row Python); geometry/ordering operators are
+Recognition runs as a batch-level Arrow/pandas UDF that stacks each
+Arrow batch's crops per width bucket; detection, structure and the
+codec and container stores run per row, Arrow-batched, through
+``partitioning.python_stage``. Geometry/ordering operators are
 faithful numpy ports of the reference's processors, pinned by unit
-tests copied 1:1 from the reference's `#[test]` suites.
+tests copied 1:1 from the reference's `#[test]` suites. Importing the
+package makes a Python worker skip re-reading unchanged zip archives on
+every task (``_pyworker``, Python < 3.12).
 
 Layout:
 - ``operators/``  numpy ports: sorting, geometry, CTC decode, DB
@@ -30,3 +34,5 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from . import _pyworker  # noqa: E402,F401

@@ -373,13 +373,14 @@ def extract_spans(
     pinned by test_pipeline_golden), not for JPEG or thresholded pages.
 
     The DAG fans the input into three branches (pass-through text,
-    media detection, doc-id preservation). To scan the source exactly
-    once, spans are exploded up front (explode_outer keeps empty docs)
-    and the flat form is persisted (MEMORY_AND_DISK, serialized) —
-    without this, a derived/expensive input lineage re-executes once
-    per branch. Callers that pre-materialize the exploded table (e.g.
-    an Iceberg staging table at corpus scale) can pass
-    persist_input=False."""
+    media detection, doc-id preservation). Spans are exploded up front
+    (explode_outer keeps empty docs) and, by default, the flat form is
+    persisted (MEMORY_AND_DISK, serialized), which spares the text and
+    media branches a second explode of the input lineage. The doc-id
+    branch is its own doc_id-only scan of docs, so the source is read
+    twice even when persisted. Callers whose input is a plain table
+    scan or a pre-materialized exploded table (e.g. an Iceberg staging
+    table at corpus scale) can pass persist_input=False."""
     from pyspark import StorageLevel
 
     cfg = cfg or ExtractConfig()
