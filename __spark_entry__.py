@@ -742,6 +742,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-6 before-plan). Checkpointing materializes the parse
         # ONCE per run; RDD-level storage is not plan-matched by the
         # CacheManager, so separate runs still recompute from parquet.
+        # No one can unpersist it: its blocks go when the driver JVM
+        # garbage-collects the RDD after the result frame is dropped and
+        # Spark's ContextCleaner removes them (periodic driver GC: every
+        # 30 min by default; pinned by tests/test_session_hygiene.py).
         unpacked = (
             pdf_hybrid_unpack_df(pdf_hybrid_store_df(docs, parallelism=par))
             .repartition(par, "doc_id")

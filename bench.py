@@ -117,9 +117,7 @@ def run_extraction(spark, sf_dir: str, replicate: int = 1) -> tuple[float, int, 
     docs = _bench_docs(spark, sf_dir, replicate)
     n_docs = docs.count()
     t0 = time.time()
-    # materialized parquet input: the three input branches re-scan the
-    # pruned table instead of persisting an exploded copy
-    out = extract_spans(spark, docs, persist_input=False)
+    out = extract_spans(spark, docs)
     n_spans = out.select(F.sum(F.size("spans"))).collect()[0][0]
     secs = time.time() - t0
     return secs, n_docs, int(n_spans or 0)

@@ -15,6 +15,13 @@ Scale design notes:
   pairs via band equi-join on 16-bit chunks.
 - embedding near-dup: cosine over float arrays with zip_with/aggregate
   (JVM), self-join pruned by an LSH bucket (similarity.py).
+
+Checkpoints: minhash_candidates, ngram_jaccard_pairs and
+simhash_candidates checkpoint lazily; duplicate_clusters checkpoints
+every third round and returns an eager localCheckpoint. No caller can
+unpersist them: Spark's ContextCleaner frees their blocks once driver
+GC collects the RDD, and its periodic GC runs every 30 min by default
+(test_session_hygiene).
 """
 
 from __future__ import annotations
@@ -122,7 +129,8 @@ def minhash_candidates(band_hashes: DataFrame) -> DataFrame:
     two sides cannot share an exchange (one side broadcasts), so the
     whole upstream shingle+minhash lineage otherwise executes twice.
     The table is n_docs x n_bands rows of short hashes — tiny at any
-    scale — and RDD-level storage is not plan-matched across runs."""
+    scale — and RDD-level storage is not plan-matched across runs.
+    Driver GC frees it (module docstring)."""
     band_hashes = band_hashes.localCheckpoint(eager=False)
     a = band_hashes.alias("a")
     b = band_hashes.alias("b")
@@ -154,7 +162,9 @@ def ngram_jaccard_pairs(
     shingle table); Jaccard is then exact over the surviving shingle
     universe. The threshold filters the RAW ratio (rounding happens
     only in the final projection) so the predicate matches the SQL
-    oracle's exactly."""
+    oracle's exactly. The shingle table's three consumers (sizes, both
+    join sides) share one lazy localCheckpoint per run, which driver
+    GC frees (module docstring)."""
     if parallelism:
         df = spread(df, parallelism, "doc_id")
     sh_all = shingle_df(df, text_col, k)
@@ -164,10 +174,8 @@ def ngram_jaccard_pairs(
         .where(F.col("df_sh") > max_df)
         .select("sh")
     )
-    # localCheckpoint, not cache(): three consumers (sizes + both join
-    # sides) share one computation per run, and RDD-level storage is
-    # not plan-matched by the CacheManager — a Dataset cache here was
-    # never unpersisted and silently served later identical plans
+    # not cache(): a Dataset cache here was never unpersisted and
+    # silently served later identical plans
     sh = sh_all.join(F.broadcast(heavy), "sh", "left_anti").localCheckpoint(
         eager=False
     )
@@ -326,7 +334,10 @@ def simhash_df(
 def simhash_candidates(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup candidates by banded SimHash (4×16-bit chunks → by
     pigeonhole any pair with hamming ≤ 3 shares a chunk) verified with
-    an exact popcount. Output: doc_a, doc_b, hamming."""
+    an exact popcount. Output: doc_a, doc_b, hamming. Both self-join
+    sides read one lazy localCheckpoint of the chunks (4 short rows per
+    doc), so the simhash UDF runs once; driver GC frees it (module
+    docstring)."""
     chunks = sim.select(
         "doc_id",
         "simhash",
@@ -344,9 +355,6 @@ def simhash_candidates(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
             )
         ).alias("c"),
     ).select("doc_id", "simhash", "c.chunk_id", "c.chunk")
-    # one computation for both self-join sides (the upstream simhash
-    # UDF would otherwise run twice — the minhash_candidates pattern);
-    # 4 short rows per doc, tiny at any scale
     chunks = chunks.localCheckpoint(eager=False)
     pairs = (
         chunks.alias("a")
@@ -385,7 +393,9 @@ def duplicate_clusters(
     localCheckpoint every few rounds truncates the growing loop
     lineage. Raises RuntimeError if the fixpoint is not reached within
     max_iters — silently returning split clusters would diverge from
-    the exact transitive-closure oracle."""
+    the exact transitive-closure oracle. Every round cache is
+    unpersisted before returning; the result is an eager
+    localCheckpoint, which driver GC frees (module docstring)."""
     # the edge set joins into EVERY propagation round — persist it once
     # or the (possibly expensive) candidate-pair lineage re-executes per
     # round (measured: minhash banding re-ran each iteration, 5x wall).
@@ -475,10 +485,8 @@ def duplicate_clusters(
             f"duplicate_clusters did not reach the fixpoint in {max_iters} rounds; "
             "component min-label eccentricity exceeds 2^rounds — raise max_iters"
         )
-    # decouple the result from every round frame (one eager checkpoint
-    # of the final labels — a cache read), then free ALL round caches:
-    # nothing leaks into the long-lived session, and the invalidation
-    # cascade above cannot touch the checkpointed result
+    # decouple the result from the round frames, then free them: the
+    # invalidation cascade cannot touch the checkpointed result
     final = labels.localCheckpoint(eager=True)
     for f in round_frames:
         f.unpersist()

@@ -628,7 +628,10 @@ def train_ivf_centroids(
     groupBy(centroid, dim) partial-agg shuffle of N·dim skinny rows per
     round. At corpus scale, train on a deterministic sample (pass
     embeddings.where(id % sample_mod == 0)) — the codebook quality
-    needs only a sample, and the plan is unchanged.
+    needs only a sample, and the plan is unchanged. Every round cache is
+    unpersisted before returning; the codebook is an eager
+    localCheckpoint, which Spark's ContextCleaner frees once driver GC
+    collects its RDD (every 30 min by default).
     """
     cent = embeddings.where(F.col(id_col) % centroid_mod == 0).select(
         F.col(id_col).alias("centroid_id"),
@@ -711,9 +714,7 @@ def _train_rounds(embeddings, cent, iters, id_col, vec_col, round_frames, parall
         cent = cent.join(upd, "centroid_id", "left").select(
             "centroid_id", F.coalesce("new_cv", "cv").alias("cv")
         )
-    # materialize + decouple the final K-row codebook (one tiny eager
-    # checkpoint), then free every round's cache — nothing stays pinned
-    # in a long-lived session
+    # decouple the final K-row codebook, then free every round's cache
     cent = cent.localCheckpoint(eager=True)
     for f in round_frames:
         f.unpersist()

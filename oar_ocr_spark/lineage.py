@@ -115,10 +115,7 @@ def run_extraction_job(
         # overwrite alone would keep an earlier attempt's stale one
         for d in bucket_dirs.values():
             shutil.rmtree(d, ignore_errors=True)
-        # persist_input=False: the corpus is a table scan, cheap to read
-        # per branch, and a persisted input per batch would stay cached
-        # for the rest of the session
-        out = extract_spans(spark, subset, cfg, persist_input=False).withColumn(
+        out = extract_spans(spark, subset, cfg).withColumn(
             "bucket", _bucket_col(n_buckets)
         )
         # each bucket goes to one write task: one file per bucket at any

@@ -56,7 +56,7 @@ from .operators.ctc import ctc_collapse_batch, ctc_word_boxes
 from .partitioning import python_stage
 from .schemas import CROPS_SCHEMA, REC_SCHEMA, REC_WORDBOX_SCHEMA, RESULTS_SCHEMA
 
-__all__ = ["extract_spans", "detect_crops_df", "recognize_df", "assemble_results"]
+__all__ = ["extract_spans", "detect_crops_from_flat", "recognize_df", "assemble_results"]
 
 
 # --------------------------------------------------------------------------
@@ -245,12 +245,6 @@ def recognize_with_word_boxes(crops: DataFrame, cfg: ExtractConfig) -> DataFrame
     return crops.mapInPandas(wordbox_iter, schema=REC_WORDBOX_SCHEMA)
 
 
-def detect_crops_df(docs: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """media spans → crops DataFrame (detect stage), from nested docs."""
-    flat = docs.select("doc_id", F.explode_outer("spans").alias("s"))
-    return detect_crops_from_flat(flat, cfg)
-
-
 def detect_crops_from_flat(
     spans_flat: DataFrame,
     cfg: ExtractConfig,
@@ -353,7 +347,7 @@ def extract_spans(
     docs: DataFrame,
     cfg: ExtractConfig | None = None,
     num_partitions: int | None = None,
-    persist_input: bool = True,
+    persist_input: bool = False,
     media_store: DataFrame | None = None,
 ) -> DataFrame:
     """documents(doc_id, spans) → results(doc_id, spans) (RESULTS_SCHEMA).
@@ -373,22 +367,21 @@ def extract_spans(
     pinned by test_pipeline_golden), not for JPEG or thresholded pages.
 
     The DAG fans the input into three branches (pass-through text,
-    media detection, doc-id preservation). Spans are exploded up front
-    (explode_outer keeps empty docs) and, by default, the flat form is
-    persisted (MEMORY_AND_DISK, serialized), which spares the text and
-    media branches a second explode of the input lineage. The doc-id
-    branch is its own doc_id-only scan of docs, so the source is read
-    twice even when persisted. Callers whose input is a plain table
-    scan or a pre-materialized exploded table (e.g. an Iceberg staging
-    table at corpus scale) can pass persist_input=False."""
-    from pyspark import StorageLevel
-
+    media detection, doc-id preservation), and each branch re-reads the
+    input: the text and media branches explode the spans from it
+    (explode_outer keeps empty docs; no exchange sits between the input
+    and the explode), and the doc-id branch is its own doc_id-only
+    scan. Nothing is persisted, so a long-lived session keeps no copy
+    of the input after the query; a caller whose input lineage is
+    expensive writes it to a table first."""
+    if persist_input:
+        raise ValueError(
+            "extract_spans never persists its input; persist_input only accepts False"
+        )
     cfg = cfg or ExtractConfig()
     P = num_partitions or spark.sparkContext.defaultParallelism
 
     spans_flat = docs.select("doc_id", F.explode_outer("spans").alias("s"))
-    if persist_input:
-        spans_flat = spans_flat.persist(StorageLevel.MEMORY_AND_DISK)
 
     text_spans = spans_flat.where(F.col("s.kind") == "text").select(
         "doc_id",

@@ -53,35 +53,24 @@ def extract_stream(
     results_path: str,
     checkpoint_path: str,
     cfg: ExtractConfig | None = None,
-    trigger_once: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """readStream(documents parquet dir) → extract_spans per micro-batch
-    → append parquet. Returns the started StreamingQuery.
-
-    trigger_once=True processes the currently-available input and
-    stops (the snapshot-delta mode); set False with
-    max_files_per_trigger for a continuous tail."""
+    → append parquet. Returns the started StreamingQuery, which
+    processes the input available at start (trigger availableNow, the
+    snapshot-delta mode) and stops."""
     cfg = cfg or ExtractConfig()
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # the micro-batch is a file scan: re-reading it per branch is
-        # cheap, and a persisted copy per batch would outlive the query
-        out = extract_spans(batch_df.sparkSession, batch_df, cfg, persist_input=False)
+        out = extract_spans(batch_df.sparkSession, batch_df, cfg)
         write_batch_idempotent(out, results_path, batch_id)
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_path
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def dedup_stream(
@@ -89,7 +78,6 @@ def dedup_stream(
     input_path: str,
     results_path: str,
     checkpoint_path: str,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming exact dedup with KEYED STATE: a continuously arriving
     corpus of (doc_id, text) rows is deduplicated across micro-batches
@@ -102,7 +90,9 @@ def dedup_stream(
     restarted stream keeps its memory of what it already kept.
 
     Output rows: (fp, keep_doc_id) appended to a batch_id-partitioned
-    parquet (idempotent per micro-batch, like extract_stream).
+    parquet (idempotent per micro-batch, like extract_stream). Like
+    extract_stream, the query processes the input available at start
+    (trigger availableNow) and stops.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql import types as T
@@ -161,6 +151,4 @@ def dedup_stream(
     writer = deduped.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -1,7 +1,7 @@
 """End-to-end golden tests: the Spark pipeline's span output must equal
 the single-process reference's span sequence EXACTLY on
 (kind, text, media_ref, order) per document, and must be identical
-across parallelism levels / pooling modes (BASELINE.json invariant)."""
+across parallelism levels and page sources (BASELINE.json invariant)."""
 
 import pytest
 

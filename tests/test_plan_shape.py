@@ -58,7 +58,7 @@ def _detect_tasks_on_grouped_input(docs, media_store=None) -> int:
 
 def test_extraction_plan_two_python_boundaries_and_pruned_scan(spark, tmp_path):
     docs = _parquet_docs(spark, tmp_path, generate_documents(12, seed=9))
-    out = extract_spans(spark, docs, persist_input=False)
+    out = extract_spans(spark, docs)
     plan = _plan(out)
     # exactly two Python boundaries: detect and recognize (formatted
     # explain lists each node once in the tree and once in the detail
@@ -106,7 +106,7 @@ def test_page_store_join_shuffles_above_broadcast_threshold(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = extract_spans(spark, docs, media_store=store, persist_input=False)
+        out = extract_spans(spark, docs, media_store=store)
         plan = _plan(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -122,7 +122,7 @@ def test_page_store_join_shuffles_above_broadcast_threshold(spark, tmp_path):
     assert _detect_tasks_on_grouped_input(docs, media_store=store) == P
     b = {
         r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in extract_spans(spark, docs, persist_input=False).collect()
+        for r in extract_spans(spark, docs).collect()
     }
     assert a == b
 
@@ -238,3 +238,24 @@ def test_one_partitioning_policy():
     # hashpartitioning(doc_id, offset, det_idx) text
     found = _method_call_sites(lambda a: a == "repartition")
     assert found == {("partitioning.py", "spread"), ("pipeline.py", "extract_spans")}
+
+
+def test_every_cache_has_an_owner():
+    # a Dataset cache nobody unpersists outlives its query in a
+    # long-lived session and serves later identical plans; the two
+    # iterative loops own their round caches and free them on return
+    found = _method_call_sites(lambda a: a in ("persist", "cache"))
+    assert found == {
+        ("functions/dedup.py", "duplicate_clusters"),
+        ("functions/similarity.py", "_train_rounds"),
+    }
+    # no caller can unpersist a localCheckpoint: its blocks go at driver
+    # GC (test_session_hygiene), so each site is a reviewed exception
+    found = _method_call_sites(lambda a: a == "localCheckpoint")
+    assert found == {
+        ("functions/dedup.py", "minhash_candidates"),
+        ("functions/dedup.py", "ngram_jaccard_pairs"),
+        ("functions/dedup.py", "simhash_candidates"),
+        ("functions/dedup.py", "duplicate_clusters"),
+        ("functions/similarity.py", "_train_rounds"),
+    }

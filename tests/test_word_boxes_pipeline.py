@@ -4,17 +4,23 @@ recognized character."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from oar_ocr_spark.local_ref import ExtractConfig
-from oar_ocr_spark.pipeline import detect_crops_df, recognize_with_word_boxes
+from oar_ocr_spark.pipeline import detect_crops_from_flat, recognize_with_word_boxes
 from oar_ocr_spark.schemas import DOCUMENTS_SCHEMA
+
+
+def _crops(docs, cfg):
+    flat = docs.select("doc_id", F.explode_outer("spans").alias("s"))
+    return detect_crops_from_flat(flat, cfg)
 
 
 def test_word_boxes_through_pipeline(spark):
     docs = [(f"wb{d}", [("media", None, f"wb{d}_m", 0)]) for d in range(6)]
     df = spark.createDataFrame(docs, schema=DOCUMENTS_SCHEMA)
     cfg = ExtractConfig()
-    crops = detect_crops_df(df, cfg)
+    crops = _crops(df, cfg)
     rows = recognize_with_word_boxes(crops, cfg).collect()
     assert rows
     checked = 0
@@ -38,7 +44,7 @@ def test_word_boxes_blanked_with_text(spark):
     docs = [(f"wbt{d}", [("media", None, f"wbt{d}_m", 0)]) for d in range(3)]
     df = spark.createDataFrame(docs, schema=DOCUMENTS_SCHEMA)
     cfg = ExtractConfig(rec_score_threshold=0.99)
-    rows = recognize_with_word_boxes(detect_crops_df(df, cfg), cfg).collect()
+    rows = recognize_with_word_boxes(_crops(df, cfg), cfg).collect()
     assert rows
     for r in rows:
         assert r["text"] == ""
@@ -77,7 +83,7 @@ def test_word_boxes_match_per_crop_reference(spark, threshold):
     docs = [(f"wbr{d}", [("media", None, f"wbr{d}_m", 0)]) for d in range(4)]
     df = spark.createDataFrame(docs, schema=DOCUMENTS_SCHEMA)
     cfg = ExtractConfig(rec_score_threshold=threshold)
-    crops = detect_crops_df(df, cfg).localCheckpoint()
+    crops = _crops(df, cfg).localCheckpoint()
     key = ("doc_id", "offset", "det_idx")
     ref = {tuple(r[k] for k in key): _reference(r, cfg) for r in crops.collect()}
     got = {
