@@ -103,12 +103,10 @@ _HTML_SCHEMA = T.StructType(
 )
 
 
-def html_corpus_df(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def html_corpus_df(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, html) rendered pages (Arrow-batched)."""
     return python_stage(
-        docs.select(F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text")),
+        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
         lambda doc_id, text: [(str(doc_id), render_html(str(doc_id), text or ""))],
         _HTML_SCHEMA,
         "html_corpus",

@@ -25,7 +25,6 @@ import struct
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..partitioning import python_stage
@@ -195,10 +194,7 @@ _FRAME_FEATURES_SCHEMA = T.StructType(
 
 
 def video_store_df(
-    refs: DataFrame,
-    n_frames: int = 8,
-    ref_col: str = "media_ref",
-    parallelism: int | None = None,
+    refs: DataFrame, n_frames: int = 8, parallelism: int | None = None
 ) -> DataFrame:
     """(media_ref) → (media_ref, payload:AVI bytes, n_frames), on the
     shared multimodal.payload_store_df scaffold (the per-ref UDF is
@@ -209,9 +205,7 @@ def video_store_df(
         frames = render_video_frames(ref, n_frames)
         return (ref, encode_avi_mjpeg(frames), len(frames))
 
-    return payload_store_df(
-        refs, row, schema=_VIDEO_STORE_SCHEMA, ref_col=ref_col, parallelism=parallelism
-    )
+    return payload_store_df(refs, row, schema=_VIDEO_STORE_SCHEMA, parallelism=parallelism)
 
 
 def frame_feature_rows(ref: str, data: bytes, n_sample: int) -> list[tuple]:
@@ -237,19 +231,14 @@ def frame_feature_rows(ref: str, data: bytes, n_sample: int) -> list[tuple]:
     ]
 
 
-def frame_sample_from_bytes_df(
-    store: DataFrame,
-    n_sample: int = 4,
-    ref_col: str = "media_ref",
-    payload_col: str = "payload",
-) -> DataFrame:
+def frame_sample_from_bytes_df(store: DataFrame, n_sample: int = 4) -> DataFrame:
     """(media_ref, payload:AVI) → n_sample evenly-spaced frames' features.
 
     The container seek is real: only the sampled '00dc' chunks are JPEG-
     decoded. Features are rounded to 6 dp for hash-stable goldens."""
 
     return python_stage(
-        store.select(F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")),
+        store.select("media_ref", "payload"),
         lambda ref, payload: frame_feature_rows(str(ref), bytes(payload), n_sample),
         _FRAME_FEATURES_SCHEMA,
         "frame_sample_from_bytes",

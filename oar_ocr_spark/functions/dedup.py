@@ -47,10 +47,10 @@ __all__ = [
 ]
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Group by content hash; keep min(doc_id) as representative.
     Output: fingerprint, keep_doc_id, n_dups."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), "\\s+", " ")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), "\\s+", " ")
     return (
         df.select(F.col("doc_id").cast("string").alias("doc_id"), F.md5(norm).alias("fp"))
         .groupBy("fp")
@@ -58,10 +58,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def shingle_df(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
+def shingle_df(df: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, sh): distinct word k-shingles via array HOFs (no token
     explode shuffle — shingling happens inside the row)."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     # indices 0..size-k (short docs degrade to one whole-text shingle)
     sh = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
@@ -75,7 +75,6 @@ def shingle_df(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
 
 def minhash_band_hashes(
     df: DataFrame,
-    text_col: str = "text",
     n_hashes: int = 8,
     n_bands: int = 2,
     k: int = 3,
@@ -96,7 +95,7 @@ def minhash_band_hashes(
     rows_per_band = n_hashes // n_bands
     if parallelism:
         df = spread(df, parallelism, "doc_id")
-    sh = shingle_df(df, text_col, k)
+    sh = shingle_df(df, k)
     seeds = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("seed")
     hashed = sh.select("doc_id", "sh", seeds).select(
         "doc_id",
@@ -144,7 +143,6 @@ def minhash_candidates(band_hashes: DataFrame) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
     max_df: int = 1000,
@@ -167,7 +165,7 @@ def ngram_jaccard_pairs(
     GC frees (module docstring)."""
     if parallelism:
         df = spread(df, parallelism, "doc_id")
-    sh_all = shingle_df(df, text_col, k)
+    sh_all = shingle_df(df, k)
     heavy = (
         sh_all.groupBy("sh")
         .agg(F.count("*").alias("df_sh"))
@@ -208,7 +206,6 @@ _SIMHASH_SCHEMA = T.StructType(
 def decontaminate_df(
     df: DataFrame,
     bench_mod: int = 23,
-    text_col: str = "text",
     k: int = 8,
     prompt_words: int = 12,
     parallelism: int | None = None,
@@ -229,17 +226,17 @@ def decontaminate_df(
     (exact, oracle-matched); at corpus scale you would hash them first
     (xxhash64) to shrink the broadcast, which changes no semantics
     because the count is over distinct grams per document."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     bench_txt = df.where(
         (F.col("doc_id").cast("bigint") % bench_mod) == 0
     ).select(
         "doc_id",
-        F.array_join(F.slice(toks, 1, prompt_words), " ").alias(text_col),
+        F.array_join(F.slice(toks, 1, prompt_words), " ").alias("text"),
     )
-    bench = shingle_df(bench_txt, text_col, k).select("sh").distinct()
+    bench = shingle_df(bench_txt, k).select("sh").distinct()
     if parallelism:
         df = spread(df, parallelism, "doc_id")
-    corpus = shingle_df(df, text_col, k)
+    corpus = shingle_df(df, k)
     return (
         corpus.join(F.broadcast(bench), "sh")
         .groupBy("doc_id")
@@ -310,9 +307,7 @@ def _simhash_batch(doc_ids: pd.Series, texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"doc_id": doc_ids.astype(str), "simhash": sig.view(np.int64)})
 
 
-def simhash_df(
-    df: DataFrame, text_col: str = "text", parallelism: int | None = None
-) -> DataFrame:
+def simhash_df(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     """doc_id, simhash (int64) via an Arrow-batched pandas UDF.
 
     parallelism: optionally spread the input round-robin first
@@ -323,9 +318,9 @@ def simhash_df(
 
     def simhash_iter(batches):
         for pdf in batches:
-            yield _simhash_batch(pdf["doc_id"], pdf[text_col])
+            yield _simhash_batch(pdf["doc_id"], pdf["text"])
 
-    src = df.select(F.col("doc_id").cast("string").alias("doc_id"), text_col)
+    src = df.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
     if parallelism:
         src = spread(src, parallelism)
     return src.mapInPandas(simhash_iter, schema=_SIMHASH_SCHEMA)
@@ -374,9 +369,7 @@ def simhash_candidates(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-def duplicate_clusters(
-    pairs: DataFrame, doc_a: str = "doc_a", doc_b: str = "doc_b", max_iters: int = 20
-) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup candidate pairs → duplicate
     clusters: (doc_id, cluster_id) with cluster_id = min doc id in the
     component — the canonical representative-selection step after any
@@ -407,12 +400,8 @@ def duplicate_clusters(
     edges = pairs.select(
         F.explode(
             F.array(
-                F.struct(
-                    F.col(doc_a).alias("src"), F.col(doc_b).alias("dst")
-                ),
-                F.struct(
-                    F.col(doc_b).alias("src"), F.col(doc_a).alias("dst")
-                ),
+                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
             )
         ).alias("e")
     ).select("e.src", "e.dst").persist()

@@ -39,7 +39,6 @@ import re
 from html.parser import HTMLParser
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..partitioning import python_stage
@@ -310,13 +309,11 @@ _MAIN_SCHEMA = T.StructType(
 )
 
 
-def html_main_content_df(
-    df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
+def html_main_content_df(df: DataFrame) -> DataFrame:
     """(doc_id, html) → (doc_id, main_text, n_blocks_kept,
     n_blocks_dropped) via one Arrow-batched Python stage."""
     return python_stage(
-        df.select(F.col(id_col).alias("doc_id"), F.col(html_col).alias("html")),
+        df.select("doc_id", "html"),
         lambda doc_id, html: [(str(doc_id), *extract_main_content(html))],
         _MAIN_SCHEMA,
         "html_main_content",

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..partitioning import python_stage
@@ -137,7 +136,6 @@ def payload_store_df(
     refs: DataFrame,
     row_fn,
     schema: T.StructType = PAYLOAD_STORE_SCHEMA,
-    ref_col: str = "media_ref",
     parallelism: int | None = None,
 ) -> DataFrame:
     """Shared scaffold for every real-format media store: (media_ref)
@@ -154,7 +152,7 @@ def payload_store_df(
     EBCOT pages on one task); round-robin gives the exact even split,
     and results are partition-invariant by contract."""
     return python_stage(
-        refs.select(F.col(ref_col).alias("media_ref")),
+        refs.select("media_ref"),
         lambda ref: (row_fn(ref),),
         schema,
         "payload_store",
@@ -162,9 +160,7 @@ def payload_store_df(
     )
 
 
-def png_store_df(
-    refs: DataFrame, ref_col: str = "media_ref", parallelism: int | None = None
-) -> DataFrame:
+def png_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     """(media_ref) → (media_ref, payload) media-store table with REAL
     PNG bytes per page (FIXTURES.md §2 media_store.image): render the
     deterministic page, encode with functions/png.encode_png. The write
@@ -177,14 +173,11 @@ def png_store_df(
 
         return (ref, encode_png(render_page(ref)))
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
 def jpeg_store_df(
-    refs: DataFrame,
-    ref_col: str = "media_ref",
-    quality: int = 100,
-    parallelism: int | None = None,
+    refs: DataFrame, quality: int = 100, parallelism: int | None = None
 ) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store with REAL JPEG
     bytes per page (functions/jpeg.py), the entropy layout crc32-chosen
@@ -226,12 +219,10 @@ def jpeg_store_df(
             )
         return (ref, encode_jpeg(page, quality, restart_interval=ri))
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
-def lossless_jpeg_store_df(
-    refs: DataFrame, ref_col: str = "media_ref", parallelism: int | None = None
-) -> DataFrame:
+def lossless_jpeg_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store with REAL
     LOSSLESS JPEG bytes (SOF3, T.81 Annex H — the DICOM / raw-scanner
     process; functions/jpeg.py encode_jpeg_lossless). Per ref the
@@ -260,7 +251,7 @@ def lossless_jpeg_store_df(
             ),
         )
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
 def deep_jpeg_payload_for_ref(ref: str, page=None) -> bytes:
@@ -292,9 +283,7 @@ def deep_jpeg_payload_for_ref(ref: str, page=None) -> bytes:
     )
 
 
-def deep_jpeg_store_df(
-    refs: DataFrame, ref_col: str = "media_ref", parallelism: int | None = None
-) -> DataFrame:
+def deep_jpeg_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store with REAL 12-bit
     extended-sequential JPEG bytes (SOF1 — the DICOM DCT layout;
     flavor per ref via ``deep_jpeg_payload_for_ref``). Features
@@ -308,7 +297,7 @@ def deep_jpeg_store_df(
     def row(ref: str) -> tuple:
         return (ref, deep_jpeg_payload_for_ref(ref))
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
 def jp2_payload_for_ref(ref: str, page=None) -> bytes:
@@ -398,9 +387,7 @@ def jp2_payload_for_ref(ref: str, page=None) -> bytes:
     return enc(page, levels=1 + h % 3, tile_size=ts, **resync)
 
 
-def jp2_store_df(
-    refs: DataFrame, ref_col: str = "media_ref", parallelism: int | None = None
-) -> DataFrame:
+def jp2_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store with REAL
     JPEG 2000 bytes (functions/jp2.py: EBCOT Tier-1/2 with the
     lossless 5/3 DWT — the PDF/A archival-scan layout — or the
@@ -415,12 +402,10 @@ def jp2_store_df(
     def row(ref: str) -> tuple:
         return (ref, jp2_payload_for_ref(ref))
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
-def legacy_store_df(
-    refs: DataFrame, ref_col: str = "media_ref", parallelism: int | None = None
-) -> DataFrame:
+def legacy_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store with REAL
     GIF/TIFF/BMP bytes — the legacy-format third of the write seam
     (png_store_df / jpeg_store_df are the other two). Per ref the
@@ -467,12 +452,10 @@ def legacy_store_df(
             data = encode_bmp(page, palette=grey_palette, rle=bool(h & 4))
         return (ref, data)
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
-def fax_store_df(
-    refs: DataFrame, ref_col: str = "media_ref", parallelism: int | None = None
-) -> DataFrame:
+def fax_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store of SCANNED
     BILEVEL bytes: the page is thresholded to bilevel (>=128 → 255)
     and stored either as a CCITT-compressed TIFF (functions/ccitt.py,
@@ -606,19 +589,17 @@ def fax_store_df(
         )
         return (ref, data)
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
-def decode_media_df(refs: DataFrame, ref_col: str = "media_ref") -> DataFrame:
+def decode_media_df(refs: DataFrame) -> DataFrame:
     """(media_ref) → decoded metadata row per media item."""
 
     def row(ref: str) -> list[tuple]:
         img = _decode_payload(ref, "image")
         return [(ref, "image", img.shape[1], img.shape[0], img.nbytes)]
 
-    return python_stage(
-        refs.select(F.col(ref_col).alias("media_ref")), row, MEDIA_META_SCHEMA, "decode_media"
-    )
+    return python_stage(refs.select("media_ref"), row, MEDIA_META_SCHEMA, "decode_media")
 
 
 def _feature_row(ref: str, img: np.ndarray, cfg) -> tuple:
@@ -636,23 +617,21 @@ def _feature_row(ref: str, img: np.ndarray, cfg) -> tuple:
     )
 
 
-def image_features_df(refs: DataFrame, ref_col: str = "media_ref") -> DataFrame:
+def image_features_df(refs: DataFrame) -> DataFrame:
     """Decode + feature-extract: dims, mean intensity, ink ratio, region
     count (via the detection operators) per media item."""
     from ..local_ref import ExtractConfig
 
     cfg = ExtractConfig()
     return python_stage(
-        refs.select(F.col(ref_col).alias("media_ref")),
+        refs.select("media_ref"),
         lambda ref: [_feature_row(ref, _decode_payload(ref, "image"), cfg)],
         _FEATURES_SCHEMA,
         "image_features",
     )
 
 
-def image_features_from_bytes_df(
-    store: DataFrame, ref_col: str = "media_ref", payload_col: str = "payload"
-) -> DataFrame:
+def image_features_from_bytes_df(store: DataFrame) -> DataFrame:
     """Feature extraction over REAL media bytes (load_image_from_memory
     parity, utils/image.rs:65): each row's binary payload decodes
     through the PNG codec; features match image_features_df exactly
@@ -661,7 +640,7 @@ def image_features_from_bytes_df(
 
     cfg = ExtractConfig()
     return python_stage(
-        store.select(F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")),
+        store.select("media_ref", "payload"),
         lambda ref, payload: [_feature_row(ref, _decode_payload(ref, "image", payload), cfg)],
         _FEATURES_SCHEMA,
         "image_features_from_bytes",
@@ -679,9 +658,7 @@ _FRAME_SCHEMA = T.StructType(
 )
 
 
-def frame_sample_df(
-    refs: DataFrame, n_frames: int = 4, ref_col: str = "media_ref"
-) -> DataFrame:
+def frame_sample_df(refs: DataFrame, n_frames: int = 4) -> DataFrame:
     """Frame-sampling plumbing for video-like media: emits n_frames
     evenly-spaced "frames" per ref (here: horizontal strips of the
     decoded page — the real sampler would seek the container). Shows
@@ -698,6 +675,4 @@ def frame_sample_df(
             rows.append((ref, i, strip.tobytes(), strip.shape[0], strip.shape[1]))
         return rows
 
-    return python_stage(
-        refs.select(F.col(ref_col).alias("media_ref")), row, _FRAME_SCHEMA, "frame_sample"
-    )
+    return python_stage(refs.select("media_ref"), row, _FRAME_SCHEMA, "frame_sample")

@@ -26,22 +26,20 @@ def _recognized(spans: Column) -> Column:
     return F.filter(spans, lambda s: s["text"].isNotNull() & (F.length(s["text"]) > 0))
 
 
-def recognized_spans(df: DataFrame, spans_col: str = "spans") -> DataFrame:
+def recognized_spans(df: DataFrame) -> DataFrame:
     """Keep only spans with non-empty text (recognized_text_regions,
     result.rs:53-63)."""
-    return df.withColumn(spans_col, _recognized(F.col(spans_col)))
+    return df.withColumn("spans", _recognized(F.col("spans")))
 
 
-def confident_spans(
-    df: DataFrame, min_confidence: float, spans_col: str = "spans"
-) -> DataFrame:
+def confident_spans(df: DataFrame, min_confidence: float) -> DataFrame:
     """Keep recognized spans whose confidence >= min_confidence
     (confident_text_regions, result.rs:55-63); pass-through text spans
     (null confidence) are kept — they carry source-given text."""
     return df.withColumn(
-        spans_col,
+        "spans",
         F.filter(
-            F.col(spans_col),
+            F.col("spans"),
             lambda s: s["text"].isNotNull()
             & (F.length(s["text"]) > 0)
             & (s["confidence"].isNull() | (s["confidence"] >= F.lit(min_confidence))),

@@ -119,13 +119,7 @@ def _cos_pre(dot_ab: Column, na: Column, nb: Column) -> Column:
     return dot_ab / (na * nb)
 
 
-def knn_bruteforce(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def knn_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (small Q).
 
     Output: query_id, neighbor_id, cosine (4dp), rank.
@@ -146,7 +140,7 @@ def knn_bruteforce(
     # cap check happens on the collected rows — a separate count()
     # would execute the query-side plan twice
     qrows = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
         .limit(MAX_BRUTEFORCE_QUERIES + 1)
         .collect()
     )
@@ -193,7 +187,7 @@ def knn_bruteforce(
             yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cos": out_c})
 
     local = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("ev")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ev")
     ).mapInPandas(it, schema=schema)
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("cos"), 6).desc(), F.col("neighbor_id")
@@ -210,13 +204,7 @@ def knn_bruteforce(
     )
 
 
-def knn_self_join(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_blocks: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def knn_self_join(embeddings: DataFrame, k: int = 5, n_blocks: int = 8) -> DataFrame:
     """Exact all-pairs top-k cosine self-join — distributed, bounded,
     no driver collect.
 
@@ -238,9 +226,9 @@ def knn_self_join(
 
     spark = embeddings.sparkSession
     e = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("v"),
+        F.pmod(F.hash(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     peers = spark.range(n_blocks).select(F.col("id").cast("int").alias("peer"))
     qside = e.crossJoin(F.broadcast(peers)).select(
@@ -318,8 +306,6 @@ def lsh_bucket_df(
     n_bits: int = 8,
     seed: int = 13,
     n_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign each vector its sign-bit LSH bucket in each of `n_tables`
     hash tables (multi-table LSH: candidate recall grows with L while
@@ -342,8 +328,8 @@ def lsh_bucket_df(
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # (B, dim)
-            ids = pdf[id_col].to_numpy()
+            M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)  # (B, dim)
+            ids = pdf["vec_id"].to_numpy()
             frames = []
             for t in range(n_tables):
                 bits = (M @ planes[t].T) > 0  # (B, n_bits)
@@ -355,16 +341,10 @@ def lsh_bucket_df(
                 )
             yield pd.concat(frames, ignore_index=True)
 
-    return df.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(it, schema=schema)
+    return df.select("vec_id", "embedding").mapInPandas(it, schema=schema)
 
 
-def axis_bucket_df(
-    df: DataFrame,
-    n_bits: int = 6,
-    n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def axis_bucket_df(df: DataFrame, n_bits: int = 6, n_tables: int = 4) -> DataFrame:
     """Deterministic axis-aligned hyperplane LSH buckets — pure
     Catalyst, no Python worker: table t's bucket packs the sign bits
     of embedding components [t*n_bits, (t+1)*n_bits). Axis-aligned
@@ -372,7 +352,7 @@ def axis_bucket_df(
     are expressible in ANSI SQL, which makes the full ANN query
     oracle-checkable end to end. Requires dim >= n_bits * n_tables.
     Output: (vec_id, table_id, bucket) — one row per table."""
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
     tables = []
     for t in range(n_tables):
         bucket = F.lit(0)
@@ -386,9 +366,9 @@ def axis_bucket_df(
                 bucket.cast("int").alias("bucket"),
             )
         )
-    return df.select(
-        F.col(id_col).alias("vec_id"), F.explode(F.array(*tables)).alias("tb")
-    ).select("vec_id", F.col("tb.table_id").alias("table_id"), F.col("tb.bucket").alias("bucket"))
+    return df.select("vec_id", F.explode(F.array(*tables)).alias("tb")).select(
+        "vec_id", F.col("tb.table_id").alias("table_id"), F.col("tb.bucket").alias("bucket")
+    )
 
 
 def lsh_ann(
@@ -399,8 +379,6 @@ def lsh_ann(
     n_bits: int = 6,
     seed: int = 13,
     n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     planes: str = "random",
 ) -> DataFrame:
     """Approximate top-k: candidates = same bucket in ANY of n_tables
@@ -416,19 +394,15 @@ def lsh_ann(
     if planes == "axis":
         if dim < n_bits * n_tables:
             raise ValueError(f"axis planes need dim >= n_bits*n_tables ({n_bits*n_tables})")
-        eb = axis_bucket_df(embeddings, n_bits, n_tables, id_col, vec_col).withColumnRenamed(
+        eb = axis_bucket_df(embeddings, n_bits, n_tables).withColumnRenamed("vec_id", "neighbor_id")
+        qb = axis_bucket_df(queries, n_bits, n_tables).withColumnRenamed("vec_id", "query_id")
+    else:
+        eb = lsh_bucket_df(embeddings, dim, n_bits, seed, n_tables).withColumnRenamed(
             "vec_id", "neighbor_id"
         )
-        qb = axis_bucket_df(queries, n_bits, n_tables, id_col, vec_col).withColumnRenamed(
+        qb = lsh_bucket_df(queries, dim, n_bits, seed, n_tables).withColumnRenamed(
             "vec_id", "query_id"
         )
-    else:
-        eb = lsh_bucket_df(
-            embeddings, dim, n_bits, seed, n_tables, id_col, vec_col
-        ).withColumnRenamed("vec_id", "neighbor_id")
-        qb = lsh_bucket_df(
-            queries, dim, n_bits, seed, n_tables, id_col, vec_col
-        ).withColumnRenamed("vec_id", "query_id")
     cand = (
         eb.join(F.broadcast(qb), ["table_id", "bucket"])
         .where(F.col("neighbor_id") != F.col("query_id"))
@@ -436,14 +410,14 @@ def lsh_ann(
         .distinct()
     )
     e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("ev"),
-        vec_norm(F.col(vec_col)).alias("nev"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ev"),
+        vec_norm(F.col("embedding")).alias("nev"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        vec_norm(F.col(vec_col)).alias("nqv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        vec_norm(F.col("embedding")).alias("nqv"),
     )
     pairs = cand.join(e, "neighbor_id").join(F.broadcast(q), "query_id")
     sim = pairs.select(
@@ -479,8 +453,6 @@ def embedding_near_dup(
     n_tables: int = 8,
     seed: int = 13,
     planes: str = "random",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (vec_a, vec_b, cosine)
     with vec_a < vec_b and round(cosine,4) >= threshold.
@@ -524,7 +496,7 @@ def embedding_near_dup(
     uses seeded gaussian planes (better spread, pandas-UDF matmul).
     """
     if mode == "exact":
-        knn = knn_self_join(embeddings, k=k, n_blocks=n_blocks, id_col=id_col, vec_col=vec_col)
+        knn = knn_self_join(embeddings, k=k, n_blocks=n_blocks)
         return knn.where(
             (F.col("cosine") >= threshold) & (F.col("query_id") < F.col("neighbor_id"))
         ).select(
@@ -545,9 +517,9 @@ def embedding_near_dup(
             raise ValueError(
                 f"axis planes need dim >= n_bits*n_tables ({n_bits * n_tables})"
             )
-        buckets = axis_bucket_df(embeddings, n_bits, n_tables, id_col, vec_col)
+        buckets = axis_bucket_df(embeddings, n_bits, n_tables)
     else:
-        buckets = lsh_bucket_df(embeddings, dim, n_bits, seed, n_tables, id_col, vec_col)
+        buckets = lsh_bucket_df(embeddings, dim, n_bits, seed, n_tables)
     a = buckets.select(
         F.col("table_id"), F.col("bucket"), F.col("vec_id").alias("vec_a")
     )
@@ -563,14 +535,14 @@ def embedding_near_dup(
     # norm hoisting (vec_norm: exact cosine CSE — bit-identical): one
     # norm per vector on the join inputs instead of two per candidate
     ea = embeddings.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("va"),
-        vec_norm(F.col(vec_col)).alias("na"),
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("va"),
+        vec_norm(F.col("embedding")).alias("na"),
     )
     eb = embeddings.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("vb"),
-        vec_norm(F.col(vec_col)).alias("nb"),
+        F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("vb"),
+        vec_norm(F.col("embedding")).alias("nb"),
     )
     pairs = cand.join(ea, "vec_a").join(eb, "vec_b")
     return pairs.select(
@@ -605,8 +577,6 @@ def train_ivf_centroids(
     embeddings: DataFrame,
     centroid_mod: int = 37,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     parallelism: int | None = None,
 ) -> DataFrame:
     """Deterministic sampled-Lloyd k-means codebook for ivf_ann.
@@ -633,27 +603,25 @@ def train_ivf_centroids(
     localCheckpoint, which Spark's ContextCleaner frees once driver GC
     collects its RDD (every 30 min by default).
     """
-    cent = embeddings.where(F.col(id_col) % centroid_mod == 0).select(
-        F.col(id_col).alias("centroid_id"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("cv"),
+    cent = embeddings.where(F.col("vec_id") % centroid_mod == 0).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.transform(F.col("embedding"), lambda v: v.cast("double")).alias("cv"),
     )
     round_frames = []
     try:
-        return _train_rounds(
-            embeddings, cent, iters, id_col, vec_col, round_frames, parallelism
-        )
+        return _train_rounds(embeddings, cent, iters, round_frames, parallelism)
     except BaseException:
         for f in round_frames:
             f.unpersist()
         raise
 
 
-def _train_rounds(embeddings, cent, iters, id_col, vec_col, round_frames, parallelism=None):
+def _train_rounds(embeddings, cent, iters, round_frames, parallelism=None):
     # hoist the vector norm (exact cosine CSE, see vec_norm) and
     # optionally spread a single-partition scan: the N·K assignment
     # pass is a broadcast nested loop over the INPUT partitioning, so a
     # one-file parquet scan would run the whole pass on one task
-    emb = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    emb = embeddings.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
     if parallelism:
         emb = spread(emb, parallelism, "vid")
     emb = emb.withColumn("nv", vec_norm(F.col("v")))
@@ -728,8 +696,6 @@ def ivf_ann(
     nprobe: int = 3,
     centroids: DataFrame | None = None,
     centroid_mod: int = 37,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     parallelism: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: vectors are assigned to
@@ -753,13 +719,13 @@ def ivf_ann(
     from pyspark.sql import Window
 
     if centroids is None:
-        centroids = embeddings.where(F.col(id_col) % centroid_mod == 0)
+        centroids = embeddings.where(F.col("vec_id") % centroid_mod == 0)
     if set(centroids.columns) >= {"centroid_id", "cv"}:
         # already a codebook frame (train_ivf_centroids output)
         cent = centroids.select("centroid_id", "cv")
     else:
         cent = centroids.select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv")
+            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
         )
 
     # norm hoisting (vec_norm: exact cosine CSE — bit-identical) plus an
@@ -768,7 +734,7 @@ def ivf_ann(
     cent_n = cent.withColumn("ncv", vec_norm(F.col("cv")))
 
     def nearest(df: DataFrame, out_id: str, n_keep: int) -> DataFrame:
-        src = df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias("v"))
+        src = df.select(F.col("vec_id").alias(out_id), F.col("embedding").alias("v"))
         if parallelism and n_keep == 1:
             src = spread(src, parallelism, out_id)
         pairs = src.withColumn("nv", vec_norm(F.col("v"))).crossJoin(
@@ -807,14 +773,14 @@ def ivf_ann(
         .distinct()
     )
     e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("ev"),
-        vec_norm(F.col(vec_col)).alias("nev"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ev"),
+        vec_norm(F.col("embedding")).alias("nev"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        vec_norm(F.col(vec_col)).alias("nqv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        vec_norm(F.col("embedding")).alias("nqv"),
     )
     pairs = cand.join(e, "neighbor_id").join(F.broadcast(q), "query_id")
     sim = pairs.select(

@@ -32,20 +32,20 @@ LANG_CUES: dict[str, list[str]] = {
 }
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """doc_id, n_tokens, n_chars, avg_token_len (whitespace tokenizer)."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     return df.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
-        F.length(text_col).alias("n_chars"),
+        F.length("text").alias("n_chars"),
         F.round(
-            (F.length(text_col) - F.size(toks) + 1) / F.size(toks), 4
+            (F.length("text") - F.size(toks) + 1) / F.size(toks), 4
         ).alias("avg_token_len"),
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Length / stopword / digit heuristics → quality in [0, 1].
 
     score = 0.4·stop_sat + 0.3·len_sat + 0.3·(1 − digit_ratio), where
@@ -53,12 +53,12 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     a standard shape for web-corpus quality filters (C4/Gopher-style
     rules re-expressed as columnar arithmetic).
     """
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n_tokens = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    digit_chars = F.length(F.regexp_replace(F.col(text_col), "[^0-9]", ""))
+    digit_chars = F.length(F.regexp_replace(F.col("text"), "[^0-9]", ""))
     stop_ratio = n_stop / n_tokens
-    digit_ratio = digit_chars / F.greatest(F.length(text_col), F.lit(1))
+    digit_ratio = digit_chars / F.greatest(F.length("text"), F.lit(1))
     stop_sat = F.least(stop_ratio / F.lit(0.1), F.lit(1.0))
     len_sat = F.least(n_tokens / F.lit(100.0), F.lit(1.0))
     return df.select(
@@ -72,14 +72,14 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Heuristic language guess: per-language *distinct* cue-token hit
     counts → argmax (deterministic tiebreak by language code).
 
     array_intersect instead of a filter-lambda: HOF lambdas evaluate
     interpreted (~µs per element — 25s for 5k docs × 5 languages at
     sf0.1), while array_intersect is a plain codegen'd expression."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
 
     def hits(cues: list[str]):
         return F.size(F.array_intersect(toks, F.array(*[F.lit(c) for c in cues])))
@@ -96,7 +96,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Content fingerprint: md5 of lowercased, whitespace-collapsed text."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), "\\s+", " ")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), "\\s+", " ")
     return df.select("doc_id", F.md5(norm).alias("fingerprint"))

@@ -43,7 +43,6 @@ import struct
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..partitioning import python_stage
@@ -708,9 +707,7 @@ _AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def wav_store_df(
-    refs: DataFrame, ref_col: str = "media_ref", parallelism: int | None = None
-) -> DataFrame:
+def wav_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     """(media_ref) → (media_ref, payload) with REAL WAV bytes per ref
     (the audio analogue of multimodal.png_store_df, on the shared
     payload_store_df scaffold)."""
@@ -720,12 +717,10 @@ def wav_store_df(
         samples, rate = render_audio(ref)
         return (ref, encode_wav(samples, rate))
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
-def telephony_store_df(
-    refs: DataFrame, ref_col: str = "media_ref", parallelism: int | None = None
-) -> DataFrame:
+def telephony_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store of COMPRESSED
     voice WAV bytes: per ref, crc32 picks G.711 mu-law, G.711 A-law,
     IMA ADPCM, or MS-ADPCM (each ADPCM with a small-block flavor so
@@ -757,12 +752,10 @@ def telephony_store_df(
 
     from .multimodal import payload_store_df
 
-    return payload_store_df(refs, row, ref_col=ref_col, parallelism=parallelism)
+    return payload_store_df(refs, row, parallelism=parallelism)
 
 
-def audio_features_from_bytes_df(
-    store: DataFrame, ref_col: str = "media_ref", payload_col: str = "payload"
-) -> DataFrame:
+def audio_features_from_bytes_df(store: DataFrame) -> DataFrame:
     """(media_ref, payload:WAV bytes) → per-clip features. All integer
     except rms, which is rounded to 6 dp (hash-stable across
     partitionings — int64 sum of squares then one float op)."""
@@ -789,7 +782,7 @@ def audio_features_from_bytes_df(
         ]
 
     return python_stage(
-        store.select(F.col(ref_col).alias("media_ref"), F.col(payload_col).alias("payload")),
+        store.select("media_ref", "payload"),
         row,
         _AUDIO_FEATURES_SCHEMA,
         "audio_features_from_bytes",

@@ -93,7 +93,8 @@ def run_extraction_job(
     and one write per batch. Each bucket's lineage row holds `n_docs`
     (the rows that landed in its directory), `batch_buckets` (how many
     buckets its batch held) and `elapsed_ms`: the wall time of the
-    whole batch, extraction to count, shared by every bucket of the
+    whole batch (the extraction, the partitioned write and the parquet
+    footer reads that count `n_docs`), shared by every bucket of the
     batch — not a per-bucket time.
 
     Returns a summary dict. `fail_after_bucket=k` raises after the k-th

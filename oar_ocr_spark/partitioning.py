@@ -11,13 +11,23 @@ downstream per-row codec UDF then runs serially on one task (the
 pdf/tiff store stages measured at single-thread wall despite
 parallelism=32).
 
-``spread`` hash-partitions on an xxhash64 EXPRESSION of the keys
-instead: the exchange no longer matches the upstream partitioning (so
-it survives planning) and carries REPARTITION_BY_NUM origin (so AQE
-never coalesces it). Assignment stays a deterministic function of the
-key columns — no rand(), so task retries are safe (SPARK-38388) — and
-results are unchanged because every consumer is partition-invariant by
-contract.
+``spread`` takes one of two forms, and both exchanges carry
+REPARTITION_BY_NUM origin, so AQE never coalesces them:
+
+- with key columns, it hash-partitions on an xxhash64 EXPRESSION of the
+  keys. The exchange no longer matches the upstream partitioning, so it
+  survives planning. Assignment is a deterministic function of the keys
+  (no rand()), so task retries are safe (SPARK-38388).
+- with no keys, it is a plain round-robin ``df.repartition(n)``: the
+  exact even split that small, costly ref sets need. ``python_stage``
+  takes this form when it gets no ``by`` keys (the payload stores), and
+  ``simhash_df`` calls it directly. Round-robin assignment depends on
+  row order, but Spark sorts each input partition before a round-robin
+  repartition (``spark.sql.execution.sortBeforeRepartition``, default
+  true), so a retried task sends every row to the same partition again.
+
+Results are unchanged either way because every consumer is
+partition-invariant by contract.
 
 ``python_stage`` is the one way a per-row Python operator enters a
 plan: it owns the spread policy and names the MapInPandas node, so
@@ -37,8 +47,10 @@ __all__ = ["spread", "python_stage"]
 
 
 def spread(df: DataFrame, n: int, *cols: str) -> DataFrame:
-    """Deterministic hash repartition into exactly ``n`` partitions that
-    neither EnsureRequirements nor AQE coalescing can remove."""
+    """Repartition into exactly ``n`` partitions that neither
+    EnsureRequirements nor AQE coalescing can remove: by xxhash64 of
+    ``cols``, or round-robin when no columns are given. Both are
+    retry-safe (module docstring)."""
     if not cols:
         return df.repartition(n)
     return df.repartition(n, F.xxhash64(*[F.col(c) for c in cols]))

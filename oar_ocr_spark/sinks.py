@@ -82,14 +82,12 @@ _ANNOTATED_SCHEMA = T.StructType(
 )
 
 
-def annotated_pages_df(
-    refs: DataFrame, cfg: ExtractConfig | None = None, ref_col: str = "media_ref"
-) -> DataFrame:
+def annotated_pages_df(refs: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame:
     """(media_ref) → (media_ref, annotated_png, width, height, n_boxes)."""
     cfg = cfg or ExtractConfig()
 
     return python_stage(
-        refs.select(F.col(ref_col).alias("media_ref")),
+        refs.select("media_ref"),
         lambda ref: [(ref, *annotate_page(ref, cfg))],
         _ANNOTATED_SCHEMA,
         "annotated_pages",

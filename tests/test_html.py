@@ -191,15 +191,6 @@ class TestHeuristics:
 
 
 class TestSpark:
-    def test_non_default_column_names(self, spark):
-        # the id_col/text_col/html_col params must actually work (the
-        # closures read the ALIASED names, not the caller's)
-        docs = spark.createDataFrame([(5, "custom column doc body")], ["k", "body"])
-        pages = html_corpus_df(docs, id_col="k", text_col="body")
-        renamed = pages.withColumnRenamed("html", "markup")
-        out = html_main_content_df(renamed, html_col="markup").collect()
-        assert out[0]["main_text"] == "custom column doc body"
-
     def test_corpus_roundtrip(self, spark):
         rows = [(i, f"document number {i} body text repeated words " * 3) for i in range(12)]
         docs = spark.createDataFrame(rows, ["doc_id", "text"])

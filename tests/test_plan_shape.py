@@ -1,12 +1,15 @@
 """Physical-plan shape pins: the scale properties BENCH.md claims are
 asserted here so a refactor cannot silently regress them."""
 
+import ast
 import contextlib
 import io
 import re
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
+import oar_ocr_spark
 from oar_ocr_spark.fixtures.corpus import generate_documents
 from oar_ocr_spark.pipeline import detect_crops_from_flat, extract_spans
 from oar_ocr_spark.local_ref import ExtractConfig
@@ -203,18 +206,18 @@ _BATCH_KERNELS = {
 }
 
 
+def _package_modules():
+    """(path relative to the package, parsed module) of every package file."""
+    root = Path(oar_ocr_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        yield path.relative_to(root).as_posix(), ast.parse(path.read_text())
+
+
 def _method_call_sites(match) -> set[tuple[str, str]]:
     """(file, top-level definition) of every `.attr(` call in the
     package whose attribute name satisfies ``match``."""
-    import ast
-    from pathlib import Path
-
-    import oar_ocr_spark
-
-    root = Path(oar_ocr_spark.__file__).parent
     found = set()
-    for path in sorted(root.rglob("*.py")):
-        tree = ast.parse(path.read_text())
+    for rel, tree in _package_modules():
         for top in tree.body:
             for node in ast.walk(top):
                 if (
@@ -222,8 +225,7 @@ def _method_call_sites(match) -> set[tuple[str, str]]:
                     and isinstance(node.func, ast.Attribute)
                     and match(node.func.attr)
                 ):
-                    name = getattr(top, "name", "<module>")
-                    found.add((path.relative_to(root).as_posix(), name))
+                    found.add((rel, getattr(top, "name", "<module>")))
     return found
 
 
@@ -238,6 +240,21 @@ def test_one_partitioning_policy():
     # hashpartitioning(doc_id, offset, det_idx) text
     found = _method_call_sites(lambda a: a == "repartition")
     assert found == {("partitioning.py", "spread"), ("pipeline.py", "extract_spans")}
+
+
+def test_no_column_name_parameters():
+    # the tables have fixed schemas (documents, the media store,
+    # embeddings), so a parameter that renames an input column is a
+    # knob no caller sets
+    found = []
+    for rel, tree in _package_modules():
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                    if arg.arg.endswith("_col") or arg.arg in ("doc_a", "doc_b"):
+                        found.append(f"{rel}:{node.lineno} {arg.arg}")
+    assert found == []
 
 
 def test_every_cache_has_an_owner():
