@@ -47,10 +47,22 @@ __all__ = ["run_extraction_job", "read_lineage"]
 # a crash throws away: the 4096-bucket deploy runs 64 batches, and a
 # crash loses at most one batch's buckets.
 BATCH_BUCKETS = 64
+_BUCKET = "CAST(pmod(xxhash64(`doc_id`), {}) AS INT)"
 
 
 def _bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    return F.expr(_BUCKET.format(n_buckets))
+
+
+def _batch_results(spark, docs, cfg, n_buckets: int, batch: list[int]) -> DataFrame:
+    """extract_spans over the documents of the `batch` buckets, with their
+    `bucket` column, spread so that each bucket goes to one write task:
+    one file per bucket at any corpus size, and the batch's files are
+    written in parallel."""
+    if len(batch) < n_buckets:
+        docs = docs.where(f"{_BUCKET.format(n_buckets)} IN ({', '.join(map(str, batch))})")
+    out = extract_spans(spark, docs, cfg).withColumn("bucket", _bucket_col(n_buckets))
+    return spread(out, spark.sparkContext.defaultParallelism, "bucket")
 
 
 def _completed_buckets(lineage_path: str) -> set[int]:
@@ -110,20 +122,14 @@ def run_extraction_job(
     for i in range(0, len(pending), BATCH_BUCKETS):
         batch = pending[i : i + BATCH_BUCKETS]
         t0 = time.time()
-        subset = docs if len(batch) == n_buckets else docs.where(_bucket_col(n_buckets).isin(batch))
         bucket_dirs = {b: os.path.join(results_path, f"bucket={b}") for b in batch}
         # a bucket that comes out empty writes no directory, so dynamic
         # overwrite alone would keep an earlier attempt's stale one
         for d in bucket_dirs.values():
             shutil.rmtree(d, ignore_errors=True)
-        out = extract_spans(spark, subset, cfg).withColumn(
-            "bucket", _bucket_col(n_buckets)
-        )
-        # each bucket goes to one write task: one file per bucket at any
-        # corpus size, and the batch's files are written in parallel
-        out = spread(out, spark.sparkContext.defaultParallelism, "bucket")
         (
-            out.write.mode("overwrite")
+            _batch_results(spark, docs, cfg, n_buckets, batch)
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(results_path)

@@ -53,7 +53,7 @@ def spread(df: DataFrame, n: int, *cols: str) -> DataFrame:
     retry-safe (module docstring)."""
     if not cols:
         return df.repartition(n)
-    return df.repartition(n, F.xxhash64(*[F.col(c) for c in cols]))
+    return df.repartition(n, F.expr(f"xxhash64({', '.join(f'`{c}`' for c in cols)})"))
 
 
 def python_stage(

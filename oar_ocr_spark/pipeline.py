@@ -11,8 +11,11 @@
            → repartition(P, doc_id, offset, det_idx)-- spreads heavy docs
            → [recognize stage: rec_iter]            -- stack per bucket →
              (doc_id, offset, det_idx, text, conf)     logits → CTC decode
-      → union → groupBy(doc_id).agg(sort_array(collect_list(...)))
-      → transform with index → results(doc_id, spans)
+      → union → groupBy(doc_id).agg(array_sort(collect_list(struct(
+             offset, sub, kind, text, media_ref, confidence))))
+      → transform with index
+    distinct(doc_id) ⟕ assembled spans             -- shuffled hash join,
+      → coalesce(spans, []) → results(doc_id, spans)  doc-id side built
 
 Design notes (scale rationale):
 - The reference's per-stage graph (preprocess → detect → crop) is fused
@@ -36,8 +39,15 @@ Design notes (scale rationale):
   parallelism (north_rule partition invariance). The reference's
   wh_ratio-sorted batching (ocr.rs:802-831) only saves padding for a
   model that pads to the batch max, so there is no sort.
-- Final assembly is pure Catalyst (sort_array + transform): no window
-  state, one shuffle for the groupBy.
+- Final assembly is pure Catalyst (array_sort + transform): no window
+  state. It shuffles twice by doc_id, once for the groupBy and once for
+  the doc-id side's distinct; the preservation join reads both
+  partitionings as they are, so it adds no exchange and no broadcast
+  job.
+- Catalyst steps are SQL strings (selectExpr, where, F.expr), one py4j
+  round trip each instead of one per Column: run_extraction_job and
+  extract_stream build this plan once per batch. Names are backquoted
+  (`offset` and `order` are SQL keywords).
 """
 
 from __future__ import annotations
@@ -273,13 +283,13 @@ def detect_crops_from_flat(
     AQE-sized output (sized by BYTES, not by the decode+detect compute
     behind each row) decides how many tasks detect."""
     media = spans_flat.where(
-        (F.col("s.kind") == "media") & F.col("s.media_ref").isNotNull()
-    ).select("doc_id", F.col("s.offset").alias("offset"), F.col("s.media_ref").alias("media_ref"))
+        "`s`.`kind` = 'media' AND `s`.`media_ref` IS NOT NULL"
+    ).selectExpr("`doc_id`", "`s`.`offset` AS `offset`", "`s`.`media_ref` AS `media_ref`")
     if media_store is not None:
         media = (
-            media.join(media_store.select("media_ref", "payload"), "media_ref", "left")
-            .where(F.col("payload").isNotNull())
-            .select("doc_id", "offset", "media_ref", "payload")
+            media.join(media_store.selectExpr("`media_ref`", "`payload`"), "media_ref", "left")
+            .where("`payload` IS NOT NULL")
+            .selectExpr("`doc_id`", "`offset`", "`media_ref`", "`payload`")
         )
     return python_stage(
         media,
@@ -302,44 +312,38 @@ def recognize_df(crops: DataFrame, cfg: ExtractConfig) -> DataFrame:
     return crops.mapInPandas(rec_iter, schema=REC_SCHEMA)
 
 
+# RESULTS_SCHEMA's spans type in SQL, names backquoted (`order` is reserved
+# under spark.sql.ansi.enforceReservedKeywords)
+_SPANS_SQL_TYPE = "array<struct<%s>>" % ", ".join(
+    f"`{f.name}`: {f.dataType.simpleString()}" for f in RESULTS_SCHEMA["spans"].dataType.elementType
+)
+
+
 def assemble_results(
     all_ids: DataFrame, text_spans: DataFrame, media_results: DataFrame
 ) -> DataFrame:
     """Union pass-through + recognized spans → final ordered spans array.
 
-    Pure Catalyst: sort_array over (offset, sub) then transform-with-
-    index assigns the final 0-based `order` (SURVEY.md §2.5
-    assign_order_indices analog). `all_ids` is a (doc_id) frame naming
-    every input document — docs whose spans produced nothing still
-    appear, with an empty array."""
-    unioned = text_spans.unionByName(media_results)
-    assembled = unioned.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("offset", "sub", "kind", "text", "media_ref", "confidence")
-                )
-            ),
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("order"),
-                s["confidence"].alias("confidence"),
-            ),
-        ).alias("spans")
-    )
-    all_ids = all_ids.select("doc_id").distinct()
-    out = (
-        all_ids.join(assembled, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(
-                "spans", F.array().cast(RESULTS_SCHEMA["spans"].dataType)
-            ).alias("spans"),
+    Pure Catalyst: array_sort over the whole (offset, sub, kind, text,
+    media_ref, confidence) struct, then transform-with-index assigns the
+    final 0-based `order` (SURVEY.md §2.5 assign_order_indices analog).
+    `all_ids`' doc_id column names every input document — docs whose
+    spans produced nothing still appear, with an empty array. The
+    doc-id side is the join's build side (a shuffled hash join): both
+    inputs arrive hash-partitioned on doc_id, so no broadcast job runs
+    and no hash table is built over the assembled spans."""
+    assembled = text_spans.unionByName(media_results).groupBy("doc_id").agg(
+        F.expr(
+            "transform(array_sort(collect_list(struct(`offset`, `sub`, `kind`, `text`,"
+            " `media_ref`, `confidence`))), (s, i) -> struct(s.`kind` AS `kind`,"
+            " s.`text` AS `text`, s.`media_ref` AS `media_ref`, i AS `order`,"
+            " s.`confidence` AS `confidence`)) AS `spans`"
         )
     )
-    return out
+    all_ids = all_ids.selectExpr("`doc_id`").distinct().hint("shuffle_hash")
+    return all_ids.join(assembled, "doc_id", "left").selectExpr(
+        "`doc_id`", f"coalesce(`spans`, CAST(array() AS {_SPANS_SQL_TYPE})) AS `spans`"
+    )
 
 
 def extract_spans(
@@ -360,11 +364,9 @@ def extract_spans(
     shuffles it by doc_id.
 
     media_store=(media_ref, payload:binary) sources pages from real
-    encoded bytes (PNG, JPEG, GIF, TIFF, BMP, JP2 or JBIG2, by magic
-    bytes) via an equi-join instead of the synthetic renderer (see
-    detect_crops_from_flat). Output equals the render path only for
-    pages stored losslessly (PNG and the grey GIF/TIFF/BMP stores,
-    pinned by test_pipeline_golden), not for JPEG or thresholded pages.
+    encoded bytes via an equi-join instead of the synthetic renderer;
+    _detect_one_page lists the formats and when the output equals the
+    render path's.
 
     The DAG fans the input into three branches (pass-through text,
     media detection, doc-id preservation), and each branch re-reads the
@@ -381,16 +383,11 @@ def extract_spans(
     cfg = cfg or ExtractConfig()
     P = num_partitions or spark.sparkContext.defaultParallelism
 
-    spans_flat = docs.select("doc_id", F.explode_outer("spans").alias("s"))
+    spans_flat = docs.selectExpr("`doc_id`", "explode_outer(`spans`) AS `s`")
 
-    text_spans = spans_flat.where(F.col("s.kind") == "text").select(
-        "doc_id",
-        F.col("s.offset").alias("offset"),
-        F.lit(-1).alias("sub"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.lit(None).cast("float").alias("confidence"),
+    text_spans = spans_flat.where("`s`.`kind` = 'text'").selectExpr(
+        "`doc_id`", "`s`.`offset` AS `offset`", "-1 AS `sub`", "`s`.`kind` AS `kind`", "`s`.`text` AS `text`",
+        "`s`.`media_ref` AS `media_ref`", "CAST(NULL AS FLOAT) AS `confidence`",
     )
 
     crops = detect_crops_from_flat(
@@ -398,19 +395,12 @@ def extract_spans(
     ).repartition(P, "doc_id", "offset", "det_idx")
     rec = recognize_df(crops, cfg)
 
-    media_results = (
-        rec.filter(F.length("text") > 0)  # empty-text drop (structure.rs:2431-2433)
-        .select(
-            "doc_id",
-            "offset",
-            F.col("det_idx").alias("sub"),
-            F.lit("media").alias("kind"),
-            "text",
-            "media_ref",
-            "confidence",
-        )
+    # empty-text drop (structure.rs:2431-2433)
+    media_results = rec.where("length(`text`) > 0").selectExpr(
+        "`doc_id`", "`offset`", "`det_idx` AS `sub`", "'media' AS `kind`", "`text`", "`media_ref`",
+        "`confidence`",
     )
     # doc-id preservation reads the input directly — a doc_id-only
     # pruned scan instead of re-running the explode (plan audit:
     # ReadSchema shrinks to one column on parquet inputs)
-    return assemble_results(docs.select("doc_id"), text_spans, media_results)
+    return assemble_results(docs, text_spans, media_results)

@@ -37,7 +37,8 @@ OUT_SPAN = T.StructType(
 RESULTS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(OUT_SPAN)),
+        # never null: a document with no output spans gets []
+        T.StructField("spans", T.ArrayType(OUT_SPAN), False),
     ]
 )
 

@@ -8,7 +8,7 @@ import pytest
 from oar_ocr_spark.fixtures.corpus import generate_documents
 from oar_ocr_spark.local_ref import ExtractConfig, extract_document_spans
 from oar_ocr_spark.pipeline import extract_spans
-from oar_ocr_spark.schemas import DOCUMENTS_SCHEMA
+from oar_ocr_spark.schemas import DOCUMENTS_SCHEMA, RESULTS_SCHEMA
 
 
 def docs_df(spark, docs):
@@ -76,6 +76,18 @@ def test_output_schema(spark, corpus):
     assert [f.name for f in out.schema.fields] == ["doc_id", "spans"]
     span_fields = out.schema["spans"].dataType.elementType.fieldNames()
     assert span_fields == ["kind", "text", "media_ref", "order", "confidence"]
+    # the declared schema is what comes out, nullability included
+    # (spans is never null: a document with no output spans gets [])
+    assert out.schema == RESULTS_SCHEMA
+    # the plan is built from SQL strings; every name in them is
+    # backquoted, so reserved-keyword enforcement (`offset`, `order`)
+    # cannot break it
+    prev = spark.conf.get("spark.sql.ansi.enforceReservedKeywords")
+    spark.conf.set("spark.sql.ansi.enforceReservedKeywords", "true")
+    try:
+        assert extract_spans(spark, df).schema == RESULTS_SCHEMA
+    finally:
+        spark.conf.set("spark.sql.ansi.enforceReservedKeywords", prev)
 
 
 def test_rotated_text_spark_matches_golden(spark):

@@ -5,6 +5,7 @@ import ast
 import contextlib
 import io
 import re
+import threading
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -83,6 +84,66 @@ def test_extraction_plan_two_python_boundaries_and_pruned_scan(spark, tmp_path):
     assert _hash_spreads(out) == [("media_ref", "MapInPandas detect_iter")], physical
     P = spark.sparkContext.defaultParallelism
     assert _detect_tasks_on_grouped_input(docs) == P
+
+
+def test_doc_id_join_builds_the_doc_id_side_without_a_broadcast(spark, tmp_path):
+    # at the default broadcast threshold, the doc-id preservation join is
+    # a shuffled hash join that builds the small doc-id side: both inputs
+    # arrive hash-partitioned on doc_id, so no broadcast job runs and no
+    # hash table is built over the assembled spans
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "10485760b"
+    docs = _parquet_docs(spark, tmp_path, generate_documents(12, seed=9))
+    out = extract_spans(spark, docs)
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final, final
+    assert "BroadcastExchange" not in final, final
+    assert "BroadcastHashJoin" not in final, final
+    assert re.findall(r"ShuffledHashJoin \[doc_id#\d+\], \[doc_id#\d+\], LeftOuter, BuildLeft", final)
+    # a write runs one job per shuffle stage (page spread, crop pool,
+    # assembly groupBy, doc-id distinct) plus the write itself
+    sc = spark.sparkContext
+    sc.setJobGroup("extract-spans-write", "extract-spans-write")
+    try:
+        extract_spans(spark, docs).write.parquet(str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("extract-spans-write")) == 5
+
+
+def _py4j_calls(build) -> int:
+    """py4j commands this thread sends to the JVM while ``build()`` runs
+    (the gateway's object-release thread is not counted)."""
+    from py4j.clientserver import ClientServerConnection
+
+    me, calls, send = threading.get_ident(), [0], ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += threading.get_ident() == me
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+    return calls[0]
+
+
+def test_extraction_plan_builds_in_few_py4j_calls(spark, tmp_path):
+    # run_extraction_job and extract_stream build this plan once per
+    # batch. Built Column by Column it took 824 calls (932 for the batch
+    # plan); built from SQL strings, about 200.
+    from oar_ocr_spark.lineage import _batch_results
+
+    docs = _parquet_docs(spark, tmp_path, generate_documents(12, seed=9))
+    for build in (
+        lambda: extract_spans(spark, docs),
+        lambda: _batch_results(spark, docs, ExtractConfig(), 4, [1, 2]),
+    ):
+        build()  # the first build also resolves JVM classes for the session
+        assert 0 < _py4j_calls(build) <= 350
 
 
 def test_page_store_join_shuffles_above_broadcast_threshold(spark, tmp_path):
