@@ -426,13 +426,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_minhash_bands(spark):
-        return D.minhash_band_hashes(
-            docs_tbl(spark),
-            n_hashes=8,
-            n_bands=2,
-            k=3,
-            parallelism=spark.sparkContext.defaultParallelism,
-        )
+        return D.minhash_band_hashes(docs_tbl(spark), n_hashes=8, n_bands=2, k=3)
 
     def q_minhash_candidates(spark):
         return D.minhash_candidates(q_minhash_bands(spark))
@@ -444,13 +438,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return D.duplicate_clusters(D.minhash_candidates(q_minhash_bands(spark)))
 
     def q_ngram_jaccard(spark):
-        return D.ngram_jaccard_pairs(
-            docs_tbl(spark),
-            k=3,
-            threshold=0.2,
-            max_df=1000,
-            parallelism=spark.sparkContext.defaultParallelism,
-        )
+        return D.ngram_jaccard_pairs(docs_tbl(spark), k=3, threshold=0.2, max_df=1000)
 
     def q_decontaminate(spark):
         # benchmark decontamination (training-data hygiene): the eval
@@ -459,12 +447,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 8-gram with a prompt — leak sources and their duplicates —
         # are flagged. Broadcast semi-join shape: benchmark gram sets
         # are small by nature.
-        return D.decontaminate_df(
-            docs_tbl(spark),
-            bench_mod=23,
-            k=8,
-            parallelism=spark.sparkContext.defaultParallelism,
-        )
+        return D.decontaminate_df(docs_tbl(spark), bench_mod=23, k=8)
 
     def q_knn(spark):
         emb = spark.table("embeddings")
@@ -472,9 +455,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return S.knn_bruteforce(emb, q, k=5)
 
     def q_simhash(spark):
-        return D.simhash_df(
-            docs_tbl(spark), parallelism=spark.sparkContext.defaultParallelism
-        )
+        return D.simhash_df(docs_tbl(spark))
 
     def q_lsh_ann(spark):
         # axis-plane flavor: bucketing is pure Catalyst and SQL-
@@ -497,13 +478,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # SQL-expressible (the oracle unrolls the same k-means rounds)
         emb = spark.table("embeddings")
         q = emb.where(F.col("vec_id") % 50 == 0)
-        par = spark.sparkContext.defaultParallelism
-        codebook = S.train_ivf_centroids(
-            emb, centroid_mod=37, iters=2, parallelism=par
-        )
-        return S.ivf_ann(
-            emb, q, k=5, nprobe=3, centroids=codebook, parallelism=par
-        )
+        codebook = S.train_ivf_centroids(emb, centroid_mod=37, iters=2)
+        return S.ivf_ann(emb, q, k=5, nprobe=3, centroids=codebook)
 
     def q_embedding_near_dup(spark):
         # embedding-cosine near-dup pairs, mode="exact": top-5
@@ -548,9 +524,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, PNG_MOD)
-        return image_features_from_bytes_df(
-            png_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return image_features_from_bytes_df(png_store_df(refs))
 
     def q_media_jpeg_roundtrip(spark):
         # the LOSSY real-format seam: render → baseline JPEG q100
@@ -565,9 +539,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, JPEG_MOD)
-        return image_features_from_bytes_df(
-            jpeg_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return image_features_from_bytes_df(jpeg_store_df(refs))
 
     def q_media_legacy_roundtrip(spark):
         # the legacy-format seam: render → encode REAL GIF / TIFF /
@@ -582,9 +554,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, LEGACY_MOD)
-        return image_features_from_bytes_df(
-            legacy_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return image_features_from_bytes_df(legacy_store_df(refs))
 
     def q_media_lossless_roundtrip(spark):
         # the predictive-coding seam: render → encode REAL lossless
@@ -598,9 +568,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, LOSSLESS_MOD)
-        return image_features_from_bytes_df(
-            lossless_jpeg_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return image_features_from_bytes_df(lossless_jpeg_store_df(refs))
 
     def q_media_deep_jpeg_roundtrip(spark):
         # the deep-DCT seam: render → lift to 12-bit (p8<<4|p8>>4) →
@@ -616,9 +584,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, DEEPJPEG_MOD)
-        return image_features_from_bytes_df(
-            deep_jpeg_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return image_features_from_bytes_df(deep_jpeg_store_df(refs))
 
     def q_media_jp2_roundtrip(spark):
         # the JPEG 2000 seam: render → encode REAL J2K/JP2 bytes
@@ -638,9 +604,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, JP2_MOD).orderBy("media_ref").limit(48)
-        return image_features_from_bytes_df(
-            jp2_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return image_features_from_bytes_df(jp2_store_df(refs))
 
     def q_media_fax_roundtrip(spark):
         # the scanned-bilevel seam: render → threshold to bilevel →
@@ -658,9 +622,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, FAX_MOD)
-        return image_features_from_bytes_df(
-            fax_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return image_features_from_bytes_df(fax_store_df(refs))
 
     def q_pdf_extract(spark):
         # PDF container input (ref: hayro dep, Cargo.toml:20; the
@@ -683,13 +645,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = interleaved_docs_df(spark).where(
             (F.col("doc_id").cast("bigint") % PDF_MOD) == 0
         )
-        store = pdf_media_store_df(
-            pdf_store_df(
-                docs,
-                parallelism=spark.sparkContext.defaultParallelism,
-                mix=True,
-            )
-        )
+        store = pdf_media_store_df(pdf_store_df(docs, mix=True))
         return _exploded_results(extract_spans(spark, docs, media_store=store))
 
     def q_pdf_text_extract(spark):
@@ -709,9 +665,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = interleaved_docs_df(spark).where(
             (F.col("doc_id").cast("bigint") % PDFTXT_MOD) == 0
         )
-        store = pdf_text_store_df(
-            docs, parallelism=spark.sparkContext.defaultParallelism
-        )
+        store = pdf_text_store_df(docs)
         return pdf_text_spans_df(store)
 
     def q_pdf_hybrid_extract(spark):
@@ -747,7 +701,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Spark's ContextCleaner removes them (periodic driver GC: every
         # 30 min by default; pinned by tests/test_session_hygiene.py).
         unpacked = (
-            pdf_hybrid_unpack_df(pdf_hybrid_store_df(docs, parallelism=par))
+            pdf_hybrid_unpack_df(pdf_hybrid_store_df(docs))
             .repartition(par, "doc_id")
             .localCheckpoint(eager=False)
         )
@@ -787,9 +741,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = interleaved_docs_df(spark).where(
             (F.col("doc_id").cast("bigint") % TIFF_MOD) == 0
         )
-        store = tiff_media_store_df(
-            tiff_store_df(docs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        store = tiff_media_store_df(tiff_store_df(docs))
         return _exploded_results(extract_spans(spark, docs, media_store=store))
 
     def q_audio_wav_features(spark):
@@ -803,9 +755,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, AUDIO_MOD)
-        return audio_features_from_bytes_df(
-            wav_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return audio_features_from_bytes_df(wav_store_df(refs))
 
     def q_audio_telephony_roundtrip(spark):
         # the COMPRESSED voice seam: waveform fixture → G.711 mu-law /
@@ -820,9 +770,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, AUDIO_MOD)
-        return audio_features_from_bytes_df(
-            telephony_store_df(refs, parallelism=spark.sparkContext.defaultParallelism)
-        )
+        return audio_features_from_bytes_df(telephony_store_df(refs))
 
     def q_video_frame_stats(spark):
         # video modality through a REAL container: AVI-MJPEG
@@ -835,14 +783,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         refs = media_refs_df(spark, VIDEO_MOD)
-        return frame_sample_from_bytes_df(
-            video_store_df(
-                refs,
-                n_frames=8,
-                parallelism=spark.sparkContext.defaultParallelism,
-            ),
-            n_sample=4,
-        )
+        return frame_sample_from_bytes_df(video_store_df(refs, n_frames=8), n_sample=4)
 
     def q_html_extract(spark):
         # HTML boilerplate strip / DOM heuristics (named by the north

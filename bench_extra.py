@@ -124,8 +124,6 @@ def cmd_stages(args):
     name = args[0]
     spark = _session()
     E._register_views(spark, SF_DIR)
-    par = spark.sparkContext.defaultParallelism
-
     if name == "pdf_extract":
         from oar_ocr_spark.functions.pdf import pdf_media_store_df, pdf_store_df
         from oar_ocr_spark.pipeline import extract_spans
@@ -135,7 +133,7 @@ def cmd_stages(args):
                 (F.col("doc_id").cast("bigint") % E.PDF_MOD) == 0
             )
             _t(spark, "pdf: interleave+filter", docs)
-            store1 = pdf_store_df(docs, parallelism=par, mix=True)
+            store1 = pdf_store_df(docs, mix=True)
             _t(spark, "pdf: +pdf_store", store1)
             store = pdf_media_store_df(store1)
             _t(spark, "pdf: +media_store", store)
@@ -149,7 +147,7 @@ def cmd_stages(args):
                 (F.col("doc_id").cast("bigint") % E.PDFTXT_MOD) == 0
             )
             _t(spark, "pdftxt: interleave+filter", docs)
-            store = pdf_text_store_df(docs, parallelism=par)
+            store = pdf_text_store_df(docs)
             _t(spark, "pdftxt: +store", store)
             _t(spark, "pdftxt: full", pdf_text_spans_df(store))
     elif name == "ivf_ann":
@@ -160,33 +158,23 @@ def cmd_stages(args):
             q = emb.where(F.col("vec_id") % 50 == 0)
             t0 = time.time()
             spark.sparkContext.setJobDescription("ivf: train")
-            codebook = S.train_ivf_centroids(
-                emb, centroid_mod=37, iters=2, parallelism=par
-            )
+            codebook = S.train_ivf_centroids(emb, centroid_mod=37, iters=2)
             print(f"  ivf: train(eager): {time.time()-t0:.3f}s", flush=True)
-            _t(
-                spark,
-                "ivf: probe+rank",
-                S.ivf_ann(
-                    emb, q, k=5, nprobe=3, centroids=codebook, parallelism=par
-                ),
-            )
+            _t(spark, "ivf: probe+rank", S.ivf_ann(emb, q, k=5, nprobe=3, centroids=codebook))
     elif name == "dedup_clusters":
         from oar_ocr_spark.functions import dedup as D
 
         for _ in range(TRIALS):
             docs = spark.table("documents")
-            bands = D.minhash_band_hashes(docs, n_hashes=8, n_bands=2, k=3, parallelism=par)
+            bands = D.minhash_band_hashes(docs, n_hashes=8, n_bands=2, k=3)
             _t(spark, "ddc: bands", bands)
-            cands = D.minhash_candidates(
-                D.minhash_band_hashes(docs, n_hashes=8, n_bands=2, k=3, parallelism=par)
-            )
+            cands = D.minhash_candidates(D.minhash_band_hashes(docs, n_hashes=8, n_bands=2, k=3))
             _t(spark, "ddc: bands+cands", cands)
             t0 = time.time()
             spark.sparkContext.setJobDescription("ddc: full")
             D.duplicate_clusters(
                 D.minhash_candidates(
-                    D.minhash_band_hashes(docs, n_hashes=8, n_bands=2, k=3, parallelism=par)
+                    D.minhash_band_hashes(docs, n_hashes=8, n_bands=2, k=3)
                 )
             ).count()
             print(f"  ddc: full: {time.time()-t0:.3f}s", flush=True)
@@ -199,7 +187,7 @@ def cmd_stages(args):
         for _ in range(TRIALS):
             refs = E.media_refs_df(spark, E.PNG_MOD)
             _t(spark, "png: refs", refs)
-            store = png_store_df(refs, parallelism=par)
+            store = png_store_df(refs)
             _t(spark, "png: +store", store)
             _t(spark, "png: full", image_features_from_bytes_df(store))
     elif name == "overhead":

@@ -193,9 +193,7 @@ _FRAME_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def video_store_df(
-    refs: DataFrame, n_frames: int = 8, parallelism: int | None = None
-) -> DataFrame:
+def video_store_df(refs: DataFrame, n_frames: int = 8) -> DataFrame:
     """(media_ref) → (media_ref, payload:AVI bytes, n_frames), on the
     shared multimodal.payload_store_df scaffold (the per-ref UDF is
     expensive: n_frames JPEG encodes)."""
@@ -205,7 +203,7 @@ def video_store_df(
         frames = render_video_frames(ref, n_frames)
         return (ref, encode_avi_mjpeg(frames), len(frames))
 
-    return payload_store_df(refs, row, schema=_VIDEO_STORE_SCHEMA, parallelism=parallelism)
+    return payload_store_df(refs, row, schema=_VIDEO_STORE_SCHEMA)
 
 
 def frame_feature_rows(ref: str, data: bytes, n_sample: int) -> list[tuple]:

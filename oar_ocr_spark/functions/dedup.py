@@ -87,14 +87,13 @@ def minhash_band_hashes(
     hash family). Band hash = md5 of the band's mins joined in seed
     order. Output: doc_id, band_id, band_hash.
 
-    parallelism: spread the doc scan first — the shingle explode and
-    the 8x md5 pass run BEFORE the first exchange, so a single-file
-    parquet scan executes them on one task (partitioning.spread
-    rationale); at corpus scale inputs arrive partitioned, leave None.
+    The doc scan is spread into `parallelism` partitions first (None:
+    the session's default parallelism) — the shingle explode and the
+    8x md5 pass run BEFORE the first exchange, so a single-file parquet
+    scan would execute them on one task (partitioning.spread rationale).
     """
     rows_per_band = n_hashes // n_bands
-    if parallelism:
-        df = spread(df, parallelism, "doc_id")
+    df = spread(df, parallelism or df.sparkSession.sparkContext.defaultParallelism, "doc_id")
     sh = shingle_df(df, k)
     seeds = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("seed")
     hashed = sh.select("doc_id", "sh", seeds).select(
@@ -162,9 +161,9 @@ def ngram_jaccard_pairs(
     only in the final projection) so the predicate matches the SQL
     oracle's exactly. The shingle table's three consumers (sizes, both
     join sides) share one lazy localCheckpoint per run, which driver
-    GC frees (module docstring)."""
-    if parallelism:
-        df = spread(df, parallelism, "doc_id")
+    GC frees (module docstring). The docs are spread like
+    minhash_band_hashes'."""
+    df = spread(df, parallelism or df.sparkSession.sparkContext.defaultParallelism, "doc_id")
     sh_all = shingle_df(df, k)
     heavy = (
         sh_all.groupBy("sh")
@@ -208,7 +207,6 @@ def decontaminate_df(
     bench_mod: int = 23,
     k: int = 8,
     prompt_words: int = 12,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Benchmark decontamination — the training-data hygiene pass: the
     "eval suite" is the first `prompt_words` words of every
@@ -234,8 +232,7 @@ def decontaminate_df(
         F.array_join(F.slice(toks, 1, prompt_words), " ").alias("text"),
     )
     bench = shingle_df(bench_txt, k).select("sh").distinct()
-    if parallelism:
-        df = spread(df, parallelism, "doc_id")
+    df = spread(df, df.sparkSession.sparkContext.defaultParallelism, "doc_id")
     corpus = shingle_df(df, k)
     return (
         corpus.join(F.broadcast(bench), "sh")
@@ -307,22 +304,20 @@ def _simhash_batch(doc_ids: pd.Series, texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"doc_id": doc_ids.astype(str), "simhash": sig.view(np.int64)})
 
 
-def simhash_df(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def simhash_df(df: DataFrame) -> DataFrame:
     """doc_id, simhash (int64) via an Arrow-batched pandas UDF.
 
-    parallelism: optionally spread the input round-robin first
-    (partitioning.spread) — a small single-file parquet arrives as ONE
-    scan partition, leaving every other worker idle through the UDF
-    stage. At corpus scale the scan already yields many partitions;
-    leave None there (no extra shuffle)."""
+    The input is spread round-robin to the session's default
+    parallelism first (partitioning.spread) — a small single-file
+    parquet arrives as ONE scan partition, which would leave every
+    other worker idle through the UDF stage."""
 
     def simhash_iter(batches):
         for pdf in batches:
             yield _simhash_batch(pdf["doc_id"], pdf["text"])
 
     src = df.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
-    if parallelism:
-        src = spread(src, parallelism)
+    src = spread(src, df.sparkSession.sparkContext.defaultParallelism)
     return src.mapInPandas(simhash_iter, schema=_SIMHASH_SCHEMA)
 
 

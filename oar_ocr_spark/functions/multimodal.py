@@ -142,21 +142,21 @@ def payload_store_df(
     refs → one encoded row per ref via `row_fn(ref) -> tuple` in a
     single Arrow-batched Python stage.
 
-    parallelism: spread the refs round-robin first. A small single-file
-    parquet arrives as ONE scan partition, serializing the expensive
-    per-ref UDF; at corpus scale the refs arrive pre-partitioned and
-    this stays None. Round-robin, not hash-by-ref: these ref sets are
-    tiny (tens to hundreds of rows) and each row costs tens to hundreds
-    of codec-milliseconds, so hash collisions directly lengthen the
-    stage tail (measured: 48 jp2 refs hashed into 32 partitions put 4-5
-    EBCOT pages on one task); round-robin gives the exact even split,
-    and results are partition-invariant by contract."""
+    The refs are spread round-robin into `parallelism` partitions first
+    (None: the session's default parallelism). A small single-file
+    parquet arrives as ONE scan partition, which would serialize the
+    expensive per-ref UDF. Round-robin, not hash-by-ref: these ref sets
+    are tiny (tens to hundreds of rows) and each row costs tens to
+    hundreds of codec-milliseconds, so hash collisions directly
+    lengthen the stage tail (measured: 48 jp2 refs hashed into 32
+    partitions put 4-5 EBCOT pages on one task); round-robin gives the
+    exact even split, and results are partition-invariant by contract."""
     return python_stage(
         refs.select("media_ref"),
         lambda ref: (row_fn(ref),),
         schema,
         "payload_store",
-        parallelism=parallelism,
+        parallelism=parallelism or refs.sparkSession.sparkContext.defaultParallelism,
     )
 
 
@@ -222,7 +222,7 @@ def jpeg_store_df(
     return payload_store_df(refs, row, parallelism=parallelism)
 
 
-def lossless_jpeg_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
+def lossless_jpeg_store_df(refs: DataFrame) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store with REAL
     LOSSLESS JPEG bytes (SOF3, T.81 Annex H — the DICOM / raw-scanner
     process; functions/jpeg.py encode_jpeg_lossless). Per ref the
@@ -251,7 +251,7 @@ def lossless_jpeg_store_df(refs: DataFrame, parallelism: int | None = None) -> D
             ),
         )
 
-    return payload_store_df(refs, row, parallelism=parallelism)
+    return payload_store_df(refs, row)
 
 
 def deep_jpeg_payload_for_ref(ref: str, page=None) -> bytes:
@@ -283,7 +283,7 @@ def deep_jpeg_payload_for_ref(ref: str, page=None) -> bytes:
     )
 
 
-def deep_jpeg_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
+def deep_jpeg_store_df(refs: DataFrame) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store with REAL 12-bit
     extended-sequential JPEG bytes (SOF1 — the DICOM DCT layout;
     flavor per ref via ``deep_jpeg_payload_for_ref``). Features
@@ -297,7 +297,7 @@ def deep_jpeg_store_df(refs: DataFrame, parallelism: int | None = None) -> DataF
     def row(ref: str) -> tuple:
         return (ref, deep_jpeg_payload_for_ref(ref))
 
-    return payload_store_df(refs, row, parallelism=parallelism)
+    return payload_store_df(refs, row)
 
 
 def jp2_payload_for_ref(ref: str, page=None) -> bytes:
@@ -387,7 +387,7 @@ def jp2_payload_for_ref(ref: str, page=None) -> bytes:
     return enc(page, levels=1 + h % 3, tile_size=ts, **resync)
 
 
-def jp2_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
+def jp2_store_df(refs: DataFrame) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store with REAL
     JPEG 2000 bytes (functions/jp2.py: EBCOT Tier-1/2 with the
     lossless 5/3 DWT — the PDF/A archival-scan layout — or the
@@ -402,7 +402,7 @@ def jp2_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
     def row(ref: str) -> tuple:
         return (ref, jp2_payload_for_ref(ref))
 
-    return payload_store_df(refs, row, parallelism=parallelism)
+    return payload_store_df(refs, row)
 
 
 def legacy_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
@@ -455,7 +455,7 @@ def legacy_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFram
     return payload_store_df(refs, row, parallelism=parallelism)
 
 
-def fax_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
+def fax_store_df(refs: DataFrame) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store of SCANNED
     BILEVEL bytes: the page is thresholded to bilevel (>=128 → 255)
     and stored either as a CCITT-compressed TIFF (functions/ccitt.py,
@@ -589,7 +589,7 @@ def fax_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
         )
         return (ref, data)
 
-    return payload_store_df(refs, row, parallelism=parallelism)
+    return payload_store_df(refs, row)
 
 
 def decode_media_df(refs: DataFrame) -> DataFrame:

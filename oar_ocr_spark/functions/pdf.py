@@ -2695,10 +2695,7 @@ _PAGE_STORE_SCHEMA = T.StructType(
 
 
 def pdf_store_df(
-    docs: DataFrame,
-    parallelism: int | None = None,
-    encrypt: str | None = None,
-    mix: bool = False,
+    docs: DataFrame, encrypt: str | None = None, mix: bool = False
 ) -> DataFrame:
     """input_hint documents → (pdf_ref, payload, n_pages): ONE real PDF
     per document packing its media spans' rendered pages in span order.
@@ -2706,9 +2703,9 @@ def pdf_store_df(
     The media-ref list per doc is computed JVM-side (filter/transform
     HOFs — no Python touches docs without media); only the render +
     encode runs in the Arrow-batched UDF. Docs with no media spans are
-    pruned before the Python boundary. `parallelism` hash-spreads a
-    single-partition docs scan across workers before the UDF (the
-    multimodal.png_store_df discipline). `encrypt` forwards to
+    pruned before the Python boundary, which first hash-spreads the
+    docs to the session's default parallelism, so a single-partition
+    docs scan still reaches every worker. `encrypt` forwards to
     encode_pdf (e.g. "aes-256") so the downstream parser's transparent
     empty-password decryption is exercised through the same seam.
     `mix=True` crc32-chooses LOSSLESS writer flavors per document —
@@ -2744,8 +2741,9 @@ def pdf_store_df(
         )
         return [(doc_id, payload, len(pages))]
 
+    P = docs.sparkSession.sparkContext.defaultParallelism
     return python_stage(
-        refs, row, _PDF_STORE_SCHEMA, "pdf_store", parallelism=parallelism, by=("doc_id",)
+        refs, row, _PDF_STORE_SCHEMA, "pdf_store", parallelism=P, by=("doc_id",)
     )
 
 
@@ -2786,9 +2784,7 @@ _PDF_TEXT_SPANS_SCHEMA = T.StructType(
 )
 
 
-def pdf_text_store_df(
-    docs: DataFrame, parallelism: int | None = None, mix: bool = True
-) -> DataFrame:
+def pdf_text_store_df(docs: DataFrame, mix: bool = True) -> DataFrame:
     """input_hint documents → (pdf_ref, payload, n_pages): ONE
     born-digital PDF per document, each TEXT span a real text page
     (content-stream show operators, functions/pdf.py writer) whose
@@ -2825,8 +2821,9 @@ def pdf_text_store_df(
         )
         return [(doc_id, payload, len(texts))]
 
+    P = docs.sparkSession.sparkContext.defaultParallelism
     return python_stage(
-        refs, row, _PDF_STORE_SCHEMA, "pdf_text_store", parallelism=parallelism, by=("doc_id",)
+        refs, row, _PDF_STORE_SCHEMA, "pdf_text_store", parallelism=P, by=("doc_id",)
     )
 
 
@@ -2870,9 +2867,7 @@ _HYBRID_UNPACK_SCHEMA = T.StructType(
 )
 
 
-def pdf_hybrid_store_df(
-    docs: DataFrame, parallelism: int | None = None
-) -> DataFrame:
+def pdf_hybrid_store_df(docs: DataFrame) -> DataFrame:
     """input_hint documents → (pdf_ref, payload, n_pages): ONE PDF per
     document packing EVERY span as a page — text spans as born-digital
     text pages (text_format='mix'), media spans as rendered image
@@ -2919,8 +2914,9 @@ def pdf_hybrid_store_df(
         )
         return [(doc_id, payload, len(pages))]
 
+    P = docs.sparkSession.sparkContext.defaultParallelism
     return python_stage(
-        refs, row, _PDF_STORE_SCHEMA, "pdf_hybrid_store", parallelism=parallelism, by=("doc_id",)
+        refs, row, _PDF_STORE_SCHEMA, "pdf_hybrid_store", parallelism=P, by=("doc_id",)
     )
 
 

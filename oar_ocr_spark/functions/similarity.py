@@ -577,7 +577,6 @@ def train_ivf_centroids(
     embeddings: DataFrame,
     centroid_mod: int = 37,
     iters: int = 2,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Deterministic sampled-Lloyd k-means codebook for ivf_ann.
 
@@ -609,22 +608,21 @@ def train_ivf_centroids(
     )
     round_frames = []
     try:
-        return _train_rounds(embeddings, cent, iters, round_frames, parallelism)
+        return _train_rounds(embeddings, cent, iters, round_frames)
     except BaseException:
         for f in round_frames:
             f.unpersist()
         raise
 
 
-def _train_rounds(embeddings, cent, iters, round_frames, parallelism=None):
-    # hoist the vector norm (exact cosine CSE, see vec_norm) and
-    # optionally spread a single-partition scan: the N·K assignment
-    # pass is a broadcast nested loop over the INPUT partitioning, so a
+def _train_rounds(embeddings, cent, iters, round_frames):
+    # hoist the vector norm (exact cosine CSE, see vec_norm) and spread
+    # to the session's default parallelism: the N·K assignment pass is
+    # a broadcast nested loop over the INPUT partitioning, so a
     # one-file parquet scan would run the whole pass on one task
     emb = embeddings.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
-    if parallelism:
-        emb = spread(emb, parallelism, "vid")
-    emb = emb.withColumn("nv", vec_norm(F.col("v")))
+    P = embeddings.sparkSession.sparkContext.defaultParallelism
+    emb = spread(emb, P, "vid").withColumn("nv", vec_norm(F.col("v")))
     for _ in range(iters):
         # persist-per-round (the measured-fast iterative shape — see
         # duplicate_clusters for why in-loop unpersist is unsafe:
@@ -696,7 +694,6 @@ def ivf_ann(
     nprobe: int = 3,
     centroids: DataFrame | None = None,
     centroid_mod: int = 37,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: vectors are assigned to
     their nearest centroid (the coarse quantizer's inverted lists);
@@ -728,15 +725,17 @@ def ivf_ann(
             F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
         )
 
-    # norm hoisting (vec_norm: exact cosine CSE — bit-identical) plus an
-    # optional spread of a single-partition scan: the N·K assignment is
-    # a broadcast nested loop over the input partitioning
+    # norm hoisting (vec_norm: exact cosine CSE — bit-identical) plus a
+    # spread of the assigned side to the session's default parallelism:
+    # the N·K assignment is a broadcast nested loop over the input
+    # partitioning, so a single-partition scan would run it on one task
+    P = embeddings.sparkSession.sparkContext.defaultParallelism
     cent_n = cent.withColumn("ncv", vec_norm(F.col("cv")))
 
     def nearest(df: DataFrame, out_id: str, n_keep: int) -> DataFrame:
         src = df.select(F.col("vec_id").alias(out_id), F.col("embedding").alias("v"))
-        if parallelism and n_keep == 1:
-            src = spread(src, parallelism, out_id)
+        if n_keep == 1:
+            src = spread(src, P, out_id)
         pairs = src.withColumn("nv", vec_norm(F.col("v"))).crossJoin(
             F.broadcast(cent_n)
         )

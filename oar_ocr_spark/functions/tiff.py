@@ -960,7 +960,7 @@ def _tiff_schemas():
     return store, page
 
 
-def tiff_store_df(docs, parallelism: int | None = None):
+def tiff_store_df(docs):
     """input_hint documents → (tiff_ref, payload, n_pages): ONE real
     multi-page TIFF per document packing its media spans' rendered
     pages in span order (the archival-scan twin of pdf_store_df; same
@@ -995,8 +995,9 @@ def tiff_store_df(docs, parallelism: int | None = None):
         ]
         return [(doc_id, encode_tiff_multipage(pages, media_refs, compression=comp), len(pages))]
 
+    P = docs.sparkSession.sparkContext.defaultParallelism
     return python_stage(
-        refs, row, store_schema, "tiff_store", parallelism=parallelism, by=("doc_id",)
+        refs, row, store_schema, "tiff_store", parallelism=P, by=("doc_id",)
     )
 
 

@@ -707,7 +707,7 @@ _AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def wav_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
+def wav_store_df(refs: DataFrame) -> DataFrame:
     """(media_ref) → (media_ref, payload) with REAL WAV bytes per ref
     (the audio analogue of multimodal.png_store_df, on the shared
     payload_store_df scaffold)."""
@@ -717,10 +717,10 @@ def wav_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
         samples, rate = render_audio(ref)
         return (ref, encode_wav(samples, rate))
 
-    return payload_store_df(refs, row, parallelism=parallelism)
+    return payload_store_df(refs, row)
 
 
-def telephony_store_df(refs: DataFrame, parallelism: int | None = None) -> DataFrame:
+def telephony_store_df(refs: DataFrame) -> DataFrame:
     """(media_ref) → (media_ref, payload) media store of COMPRESSED
     voice WAV bytes: per ref, crc32 picks G.711 mu-law, G.711 A-law,
     IMA ADPCM, or MS-ADPCM (each ADPCM with a small-block flavor so
@@ -752,7 +752,7 @@ def telephony_store_df(refs: DataFrame, parallelism: int | None = None) -> DataF
 
     from .multimodal import payload_store_df
 
-    return payload_store_df(refs, row, parallelism=parallelism)
+    return payload_store_df(refs, row)
 
 
 def audio_features_from_bytes_df(store: DataFrame) -> DataFrame:

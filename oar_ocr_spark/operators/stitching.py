@@ -15,9 +15,10 @@ Parity targets (reference = GreatV/oar-ocr at /root/reference):
 - needs_space_after / last_non_whitespace_char /
   is_non_break_line_end_punctuation: stitching.rs:2066-2079.
 
-Runs per-document inside the stitch `applyInPandas` stage; inputs are
-plain numpy boxes + python strings, so the same functions drive both
-the Spark UDF and the single-process golden generator.
+Runs per page inside the `structure_iter` stage
+(`pipeline_structure.extract_structure` → `structure.structure_page_record`);
+inputs are plain numpy boxes + python strings, so the same functions
+drive both the Spark UDF and the single-process golden generator.
 """
 
 from __future__ import annotations

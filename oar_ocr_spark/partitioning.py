@@ -71,8 +71,11 @@ def python_stage(
     an iterable of ``schema`` tuples — zero, one or many output rows per
     input row. ``parallelism`` spreads the input first (``spread``):
     round-robin without ``by`` keys — the even split small, costly ref
-    sets need — else xxhash64 of ``by``. A single-file scan arrives as
-    ONE partition, so a costly stage fed by one must set it."""
+    sets need — else xxhash64 of ``by``. None does not spread: a stage
+    chained on another stage's output inherits its partitioning. A
+    single-file scan arrives as ONE partition, so the source stages
+    (the payload, PDF and TIFF stores) pass the session's default
+    parallelism."""
     if parallelism:
         df = spread(df, parallelism, *by)
     cols = schema.fieldNames()

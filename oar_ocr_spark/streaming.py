@@ -62,8 +62,8 @@ def extract_stream(
     stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # the file source starts a batch only when a file is new, so an
+        # isEmpty() check would only cost a Spark job per batch
         out = extract_spans(batch_df.sparkSession, batch_df, cfg)
         write_batch_idempotent(out, results_path, batch_id)
 

@@ -632,7 +632,7 @@ class TestSparkOperators:
         )
 
         got = (
-            pdf_text_spans_df(pdf_text_store_df(docs, parallelism=4))
+            pdf_text_spans_df(pdf_text_store_df(docs))
             .orderBy("doc_id", "span_offset")
             .collect()
         )
@@ -660,9 +660,7 @@ class TestSparkOperators:
         from oar_ocr_spark.fixtures.render import render_page
         from oar_ocr_spark.functions.png import decode_png
 
-        unpacked = pdf_hybrid_unpack_df(
-            pdf_hybrid_store_df(docs, parallelism=4)
-        ).collect()
+        unpacked = pdf_hybrid_unpack_df(pdf_hybrid_store_df(docs)).collect()
         want = {
             (r["doc_id"], s["offset"]): s
             for r in docs.collect()

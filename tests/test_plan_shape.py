@@ -318,6 +318,49 @@ def test_no_column_name_parameters():
     assert found == []
 
 
+def test_parallelism_only_where_a_caller_chooses_it():
+    # source stages spread to the session's default parallelism
+    # themselves. python_stage keeps the keyword because its None means
+    # "inherit the input's partitioning"; the other six keep it only
+    # until perfbench, their last caller, stops passing it
+    found = set()
+    for rel, tree in _package_modules():
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                if any(arg.arg == "parallelism" for arg in a.posonlyargs + a.args + a.kwonlyargs):
+                    found.add((rel, node.name))
+    assert found == {
+        ("partitioning.py", "python_stage"),
+        ("functions/multimodal.py", "payload_store_df"),
+        ("functions/multimodal.py", "png_store_df"),
+        ("functions/multimodal.py", "jpeg_store_df"),
+        ("functions/multimodal.py", "legacy_store_df"),
+        ("functions/dedup.py", "minhash_band_hashes"),
+        ("functions/dedup.py", "ngram_jaccard_pairs"),
+    }
+
+
+def test_source_stages_spread_a_one_partition_input(spark):
+    # a single-file scan arrives as ONE partition; called without any
+    # argument, a source stage still runs its codec on every core
+    from oar_ocr_spark.functions.dedup import simhash_df
+    from oar_ocr_spark.functions.multimodal import fax_store_df
+    from oar_ocr_spark.functions.tiff import tiff_store_df
+
+    docs = generate_documents(4, seed=5)
+    rows = [(d["doc_id"], [tuple(s.values()) for s in d["spans"]]) for d in docs]
+    one = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA).coalesce(1)
+    refs = one.select(F.explode("spans.media_ref").alias("media_ref")).dropna()
+    texts = one.select("doc_id", F.concat_ws(" ", "spans.text").alias("text"))
+    for df in (one, refs, texts):
+        assert df.rdd.getNumPartitions() == 1
+    P = spark.sparkContext.defaultParallelism
+    assert P > 1
+    for stage in (fax_store_df(refs), tiff_store_df(one), simhash_df(texts)):
+        assert stage.rdd.getNumPartitions() == P
+
+
 def test_every_cache_has_an_owner():
     # a Dataset cache nobody unpersists outlives its query in a
     # long-lived session and serves later identical plans; the two

@@ -40,6 +40,13 @@ def test_stream_extracts_and_resumes(spark, tmp_path):
     assert got2.select("doc_id").distinct().count() == 16
     assert got2.count() == 16  # no doc reprocessed/duplicated
 
+    # with no new file the source runs no micro-batch at all, which is
+    # why process_batch needs no isEmpty() guard
+    batches = sorted(os.listdir(out))
+    q3 = extract_stream(spark, inp, out, ckpt)
+    q3.awaitTermination(120)
+    assert sorted(os.listdir(out)) == batches
+
     # spans equal the single-process golden for a sample doc
     sample = docs[3]
     row = got2.where(got2.doc_id == sample["doc_id"]).collect()[0]
