@@ -4,8 +4,9 @@ Pure-Python/numpy re-statement of OAROCR::predict
 (/root/reference/src/oarocr/ocr.rs:518-659): preprocess (orientation
 classify + correct + anchor mask) → detection resize → DB heatmap →
 DB postprocess → sort_quad_boxes reading order → crop → line
-orientation → recognition resize (bucketed wh_ratio) → CTC decode →
-score-threshold blanking → emit in detection order.
+orientation → recognition resize (bucketed wh_ratio) centre row →
+top-1 → CTC collapse → score-threshold blanking → emit in detection
+order.
 
 This module exists to compute golden span sequences for the Spark
 pipeline's exact-equality tests (FIXTURES.md §3): its operators are the
@@ -27,13 +28,12 @@ from .models.synthetic import (
     classify_line_orientation,
     classify_orientation,
     correct_orientation,
-    detect_heatmap,
     mask_anchor,
-    recognize_logits,
+    recognize_rows,
 )
-from .operators.ctc import ctc_decode_batch
+from .operators.ctc import ctc_collapse_batch
 from .operators.db_postprocess import DBPostProcess
-from .operators.resize import resize_for_detection, resize_for_recognition
+from .operators.resize import recognition_row, resize_for_detection
 from .operators.sorting import sort_quad_boxes
 
 __all__ = [
@@ -42,6 +42,7 @@ __all__ = [
     "extract_document_spans",
     "bucket_ratio",
     "detect_and_crop",
+    "recognize_crops",
     "detect_page_quads",
     "detect_page_polys",
 ]
@@ -83,10 +84,6 @@ class ExtractConfig:
     use_e2e_wireless_table_rec: bool = True
     use_wired_table_cells_trans_to_html: bool = False
     use_wireless_table_cells_trans_to_html: bool = False
-    # builder batch-size knob (OAROCRBuilder, ocr.rs:159-181,262-274;
-    # validated 1..=4096, ocr.rs:93,419-430): bounds the per-bucket
-    # stack the recognize UDF materializes at once.
-    region_batch_size: int = 64
     postprocess: DBPostProcess = field(init=False)
 
     @classmethod
@@ -116,9 +113,6 @@ class ExtractConfig:
         return cls(**kwargs)
 
     def __post_init__(self) -> None:
-        v = self.region_batch_size
-        if not (1 <= int(v) <= 4096):  # ocr.rs:93,419-430 bounds
-            raise ValueError(f"region_batch_size must be in 1..=4096, got {v}")
         self.postprocess = DBPostProcess(
             thresh=self.det_thresh,
             box_thresh=self.det_box_thresh,
@@ -296,20 +290,40 @@ def detect_and_crop(
     return out
 
 
+def recognize_crops(
+    crops: list[np.ndarray], cfg: ExtractConfig
+) -> list[tuple[str, float, list[int], int]]:
+    """Crops → per-crop (text, conf, kept CTC columns, T) in input order.
+
+    The ONE recognizer (ocr.rs:755-897 + decode.rs:452-552): the golden
+    generator (recognize_crop), the structure track and the Spark
+    recognize stages all call it. Line-orient each crop, take its
+    bucket_ratio from its own shape, stack one centre-row matrix per
+    bucket, run the model, CTC-collapse, and blank low-score text in
+    place (index parity, text_recognition_adapter.rs:61-102; the
+    columns stay for the caller). Each crop's result depends on that
+    crop alone, so any batching gives the same output."""
+    oriented: list[np.ndarray] = []
+    buckets = np.empty(len(crops), dtype=np.int64)
+    for k, crop in enumerate(crops):
+        if cfg.use_line_orientation and classify_line_orientation(crop) == 1:
+            crop = crop[::-1, ::-1]
+        h, w = crop.shape
+        buckets[k] = bucket_ratio(w / max(h, 1))
+        oriented.append(crop)
+    out: list[tuple[str, float, list[int], int]] = [None] * len(crops)
+    for b in np.unique(buckets):
+        pos = np.flatnonzero(buckets == b)
+        rows = np.stack([recognition_row(oriented[p], cfg.rec_target_h, int(b)) for p in pos])
+        idx, prob = recognize_rows(rows)
+        for p, (text, conf, cols, T) in zip(pos, ctc_collapse_batch(idx, prob, VOCAB)):
+            out[p] = ("" if conf < cfg.rec_score_threshold else text, conf, cols, T)
+    return out
+
+
 def recognize_crop(crop: np.ndarray, cfg: ExtractConfig) -> tuple[str, float]:
-    """One crop → (text, confidence). Line-orient → bucketed resize →
-    logits → CTC decode (ocr.rs:755-897 + decode.rs:452-552)."""
-    if cfg.use_line_orientation and classify_line_orientation(crop) == 1:
-        crop = np.ascontiguousarray(crop[::-1, ::-1])
-    h, w = crop.shape
-    ratio = w / max(h, 1)
-    resized = resize_for_recognition(crop, cfg.rec_target_h, float(bucket_ratio(ratio)))
-    logits = recognize_logits(resized)
-    [(text, conf, _cols, _T)] = ctc_decode_batch(logits[None, :, :], VOCAB)
-    # score-threshold blanking preserves index parity
-    # (text_recognition_adapter.rs:61-102)
-    if conf < cfg.rec_score_threshold:
-        return "", conf
+    """One crop → (text, confidence) through recognize_crops."""
+    [(text, conf, _cols, _T)] = recognize_crops([crop], cfg)
     return text, conf
 
 

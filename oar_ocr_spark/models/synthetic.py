@@ -20,15 +20,16 @@ Intensity contract (uint8):
                    connected component but decodes as CTC blank)
 - BG        = 255  background
 
-Detection heatmap = (255 - pixel)/255, so with DB defaults
-(thresh 0.3, db_postprocess.rs:79) every non-background pixel is
-foreground and each rendered text line is exactly one component.
+Detection heatmap = (255 - pixel)/255 (a LUT inside
+DBPostProcess.apply_uint8_inverted), so with DB defaults (thresh 0.3,
+db_postprocess.rs:79) every non-background pixel is foreground and
+each rendered text line is exactly one component.
 
 Recognition reads the *center row* of a crop: the detected box is the
 glyph block symmetrically expanded by the unclip margin
 (db_bitmap.rs:279-345), so the center row always passes through the
-strips; one timestep per resized column, CTC collapse
-(processors/decode.rs:452-552) recovers the text.
+strips; one timestep per resized column (recognize_rows), CTC
+collapse (processors/decode.rs:452-552) recovers the text.
 """
 
 from __future__ import annotations
@@ -49,13 +50,7 @@ CHAR_TO_INDEX = {c: i for i, c in enumerate(VOCAB)}
 ANCHOR_SIZE = 8  # anchor block is 8×8 at (4,4) on an upright page
 ANCHOR_CLEAR = 16  # mask_anchor whites out the [0:16, 0:16] corner
 PEAK_PROB = np.float32(0.95)  # synthetic model confidence at the argmax
-
-
-def detect_heatmap(img: np.ndarray) -> np.ndarray:
-    """Page image → DB probability map. Stand-in for the DB model
-    forward (models/detection/db.rs:122-233); one vectorized op per
-    Arrow batch."""
-    return (np.float32(255) - img.astype(np.float32)) / np.float32(255)
+BLANK_PROB = np.float32(0.05)  # its top-1 prob at blank timesteps
 
 
 def classify_orientation(img: np.ndarray) -> int:
@@ -112,20 +107,18 @@ def classify_line_orientation(crop: np.ndarray) -> int:
     return 1 if float(pos.mean()) >= crop.shape[1] / 2.0 else 0
 
 
-def recognize_logits(resized_crop: np.ndarray) -> np.ndarray:
-    """Resized (48×W) crop → (T=W, V) CTC probability matrix.
+def recognize_rows(rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(B, T) centre rows of resized crops → per-timestep top-1
+    (vocab index, prob), each (B, T).
 
-    Stand-in for the CRNN/SVTR forward (models/recognition/crnn.rs:136-278):
-    one timestep per column, peak PEAK_PROB at the encoded vocab index,
-    blank elsewhere. Pure vectorized numpy — callers stack a batch and
-    call once per Arrow batch (SCALAR_ITER UDF contract).
+    Stand-in for the CRNN/SVTR forward (models/recognition/crnn.rs:136-278)
+    followed by the per-timestep argmax CTC decoding takes
+    (decode.rs:26-42): one timestep per column; a char intensity
+    decodes to its vocab index at PEAK_PROB, every other intensity to
+    blank at BLANK_PROB (blank timesteps never reach a confidence).
+    Pure vectorized numpy — one call per aspect bucket of a batch.
     """
-    row = resized_crop[resized_crop.shape[0] // 2, :].astype(np.int32)
-    idx = row - CHAR_BASE
-    valid = (idx >= 1) & (idx < len(VOCAB))
-    idx = np.where(valid, idx, 0)  # everything else → blank
-    T = row.shape[0]
-    logits = np.zeros((T, len(VOCAB)), dtype=np.float32)
-    logits[:, 0] = np.float32(1.0) - PEAK_PROB  # blank floor
-    logits[np.arange(T), idx] = PEAK_PROB
-    return logits
+    idx = rows.astype(np.int32) - CHAR_BASE
+    idx = np.where((idx >= 1) & (idx < len(VOCAB)), idx, 0)
+    prob = np.where(idx > 0, PEAK_PROB, BLANK_PROB)
+    return idx, prob

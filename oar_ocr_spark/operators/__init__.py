@@ -22,7 +22,6 @@ from .sorting import (  # noqa: F401
     split_projection_profile,
 )
 from .ctc import (  # noqa: F401
-    ctc_decode_batch,
     ctc_word_boxes,
     char_positions_to_word_boxes,
     is_cjk,
@@ -36,4 +35,4 @@ from .stitching import (  # noqa: F401
     needs_space_after,
     sort_and_join_texts,
 )
-from .resize import resize_for_detection, resize_for_recognition  # noqa: F401
+from .resize import recognition_row, resize_for_detection  # noqa: F401

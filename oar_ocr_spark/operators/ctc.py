@@ -25,7 +25,6 @@ import numpy as np
 
 __all__ = [
     "ctc_collapse_batch",
-    "ctc_decode_batch",
     "ctc_word_boxes",
     "char_positions_to_word_boxes",
     "is_cjk",
@@ -48,8 +47,11 @@ def ctc_collapse_batch(
     conf = mean(kept probs) or 0.0 if empty; also returns kept
     timesteps (col indices) and seq_len for word-box math.
 
-    Shared by the logits path (ctc_decode_batch) and the pipeline's
-    direct-index fast path, so decode results are bit-identical.
+    The (index, prob) pairs are the model's per-timestep top-1
+    (models.synthetic.recognize_rows); its only caller is
+    local_ref.recognize_crops. Ties in the reference's argmax resolve
+    to the last maximal index (Iterator::max_by, decode.rs:26-42); the
+    synthetic model has no ties.
     """
     idx_all = np.asarray(idx_all)
     prob_all = np.asarray(prob_all, dtype=np.float32)
@@ -69,25 +71,6 @@ def ctc_collapse_batch(
         conf = float(kept_prob.mean()) if kept_prob.size else 0.0
         out.append((text, conf, [int(t) for t in kept_ts], T))
     return out
-
-
-def ctc_decode_batch(
-    logits: np.ndarray, characters: list[str]
-) -> list[tuple[str, float, list[int], int]]:
-    """Decode a (B, T, V) logit/probability tensor: per-timestep argmax
-    then ctc_collapse_batch.
-
-    Ties in argmax resolve to the *last* maximal index in the reference
-    (Iterator::max_by, decode.rs:26-42); synthetic logits here are
-    tie-free so np.argmax (first max) is equivalent — asserted by the
-    unit tests with explicit tie-free vectors.
-    """
-    p = np.asarray(logits, dtype=np.float32)
-    if p.ndim != 3:
-        raise ValueError("logits must be (B, T, V)")
-    idx_all = p.argmax(axis=2)  # (B, T)
-    prob_all = np.take_along_axis(p, idx_all[:, :, None], axis=2)[:, :, 0]
-    return ctc_collapse_batch(idx_all, prob_all, characters)
 
 
 def ctc_word_boxes(

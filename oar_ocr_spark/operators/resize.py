@@ -7,10 +7,11 @@ Parity targets (reference = GreatV/oar-ocr at /root/reference):
   shortest side < limit) / ResizeLong, max_side_limit clamp, then
   dims snapped to multiples of 32 via (v + 16) / 32 * 32 floor-div,
   floor ≥ 32; returns ratios (resize_h/h, resize_w/w).
-- resize_for_recognition: fixed target height, width =
+- recognition_row: fixed target height, width =
   height * max_wh_ratio capped at max_img_w, aspect-preserving resize
   then zero-pad right (processors/resize_recognition.rs:84-130,
-  models/recognition/crnn.rs:71-125).
+  models/recognition/crnn.rs:71-125) — only the centre row the
+  synthetic recognizer reads is built.
 
 The reference uses bilinear filters; this engine standardizes on
 nearest-neighbor sampling so the synthetic glyph intensities survive
@@ -23,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["nn_resize", "resize_for_detection", "resize_for_recognition"]
+__all__ = ["nn_resize", "recognition_row", "resize_for_detection"]
 
 
 def nn_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -83,31 +84,28 @@ def resize_for_detection(
     return out, th / h, tw / w
 
 
-def resize_for_recognition(
-    img: np.ndarray,
-    target_h: int = 48,
-    max_wh_ratio: float | None = None,
-    max_img_w: int = 3200,
-    pad_value: int = 255,
+def recognition_row(
+    crop: np.ndarray, target_h: int, bucket: int, max_img_w: int = 3200
 ) -> np.ndarray:
-    """Aspect-preserving resize to `target_h` then right-pad to the
-    batch width (crnn.rs:71-125; resize_recognition.rs:84-130).
+    """The centre row of the crop resized for recognition, without
+    materializing the resized crop.
 
-    Batch width = ceil(target_h * max_wh_ratio) capped at max_img_w; a
-    crop wider than that is squeezed to the full width. Padding uses
-    `pad_value` (background white for this engine's inverted-intensity
-    glyphs; the reference zero-pads normalized tensors — same "no
-    signal" semantics).
-    """
-    h, w = img.shape[:2]
+    Equals row target_h // 2 of the crop nn-resized to (target_h,
+    resize_w) and right-padded with background (255) to the bucket
+    width: batch width = ceil(target_h * bucket) capped at max_img_w,
+    resize_w = ceil(target_h * wh_ratio) capped at the batch width, so
+    a crop wider than its bucket is squeezed to the full width. The
+    reference zero-pads normalized tensors — the same "no signal"
+    semantics as this engine's white background. Keeping the row
+    closed-form (instead of the resized crop) removes ~200 MB/batch of
+    memory traffic that saturated RAM bandwidth with 16+ concurrent
+    workers."""
+    h, w = crop.shape
     wh_ratio = w / max(h, 1)
-    if max_wh_ratio is None:
-        max_wh_ratio = wh_ratio
-    batch_w = min(int(np.ceil(target_h * max_wh_ratio)), max_img_w)
-    resize_w = min(int(np.ceil(target_h * wh_ratio)), batch_w)
-    resize_w = max(resize_w, 1)
-    resized = nn_resize(img, target_h, resize_w)
-    if resize_w < batch_w:
-        pad = np.full((target_h, batch_w - resize_w), pad_value, dtype=img.dtype)
-        resized = np.concatenate([resized, pad], axis=1)
-    return resized
+    batch_w = min(int(np.ceil(target_h * bucket)), max_img_w)
+    resize_w = max(min(int(np.ceil(target_h * wh_ratio)), batch_w), 1)
+    r = min(int((target_h // 2 + 0.5) * h / target_h), h - 1)
+    xs = np.minimum(((np.arange(resize_w) + 0.5) * w / resize_w).astype(np.int64), w - 1)
+    out = np.full(batch_w, 255, dtype=np.uint8)
+    out[:resize_w] = crop[r][xs]
+    return out

@@ -9,8 +9,9 @@
              (doc_id, offset, media_ref,               resize→DB→sort→crop,
               det_idx, crop, wh_ratio, bucket)         one Python boundary
            → repartition(P, doc_id, offset, det_idx)-- spreads heavy docs
-           → [recognize stage: rec_iter]            -- stack per bucket →
-             (doc_id, offset, det_idx, text, conf)     logits → CTC decode
+           → [recognize stage: rec_iter]            -- recognize_crops: centre
+             (doc_id, offset, det_idx, text, conf)     row per bucket → top-1
+                                                       → CTC collapse
       → union → groupBy(doc_id).agg(array_sort(collect_list(struct(
              offset, sub, kind, text, media_ref, confidence))))
       → transform with index
@@ -60,9 +61,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .local_ref import ExtractConfig, bucket_ratio, preprocess_page
-from .models.synthetic import BG, CHAR_BASE, VOCAB, classify_line_orientation
-from .operators.ctc import ctc_collapse_batch, ctc_word_boxes
+from .local_ref import ExtractConfig, bucket_ratio, preprocess_page, recognize_crops
+from .operators.ctc import ctc_word_boxes
 from .partitioning import python_stage
 from .schemas import CROPS_SCHEMA, REC_SCHEMA, REC_WORDBOX_SCHEMA, RESULTS_SCHEMA
 
@@ -132,75 +132,15 @@ def _detect_one_page(
     return rows
 
 
-def _nn_index(dst_i: int, src: int, dst: int) -> int:
-    """Nearest-neighbor source index (operators.resize.nn_resize grid)."""
-    return min(int((dst_i + 0.5) * src / dst), src - 1)
-
-
-def _decode_row_for_crop(
-    crop: np.ndarray, target_h: int, bucket: int, max_img_w: int = 3200
-) -> np.ndarray:
-    """The single resized-crop row the synthetic recognizer reads,
-    without materializing the resized crop.
-
-    Equivalent to resize_for_recognition(crop, target_h, bucket)[target_h//2]:
-    the nn source row of the (possibly 180°-flipped) crop, nn-sampled to
-    the crop's own resize width and right-padded with background to the
-    bucket width. Keeping this closed-form (instead of the dense logits
-    tensor) removes ~200 MB/batch of memory traffic that saturated RAM
-    bandwidth with 16+ concurrent workers."""
-    h, w = crop.shape
-    wh_ratio = w / max(h, 1)
-    batch_w = min(int(np.ceil(target_h * bucket)), max_img_w)
-    resize_w = max(min(int(np.ceil(target_h * wh_ratio)), batch_w), 1)
-    r = _nn_index(target_h // 2, h, target_h)
-    row = crop[r]
-    xs = np.minimum(((np.arange(resize_w) + 0.5) * w / resize_w).astype(np.int64), w - 1)
-    out = np.full(batch_w, BG, dtype=np.uint8)
-    out[:resize_w] = row[xs]
-    return out
-
-
 def _decode_crops(pdf: pd.DataFrame, cfg: ExtractConfig) -> list[tuple]:
-    """Decode one Arrow batch of crops to per-crop (text, conf, cols, T)
-    in row order: line-orient, group by bucket, direct per-row
-    CTC-index decode (bit-identical to the logits path — both funnel
-    through ctc_collapse_batch), score-threshold blanking of text."""
+    """Decompress one Arrow batch of crops and recognize them:
+    per-crop (text, conf, cols, T) in row order (local_ref.recognize_crops,
+    the golden generator's recognizer)."""
     import zlib
 
-    n = len(pdf)
-    out: list[tuple] = [None] * n
-    crop_bytes = pdf["crop"].to_numpy()
-    crop_h = pdf["crop_h"].to_numpy()
-    crop_w = pdf["crop_w"].to_numpy()
-    buckets = pdf["bucket"].to_numpy()
-    crops: list[np.ndarray] = []
-    for k in range(n):
-        crop = np.frombuffer(zlib.decompress(crop_bytes[k]), dtype=np.uint8).reshape(
-            crop_h[k], crop_w[k]
-        )
-        if cfg.use_line_orientation and classify_line_orientation(crop) == 1:
-            crop = crop[::-1, ::-1]
-        crops.append(crop)
-    for b in np.unique(buckets):
-        all_pos = np.flatnonzero(buckets == b)
-        # region_batch_size bounds the stacked decode-row matrix per
-        # inference call (the reference's recognition chunking,
-        # ocr.rs:802-897)
-        for c0 in range(0, len(all_pos), max(int(cfg.region_batch_size), 1)):
-            pos = all_pos[c0 : c0 + max(int(cfg.region_batch_size), 1)]
-            rows = np.stack(
-                [_decode_row_for_crop(crops[p], cfg.rec_target_h, int(b)) for p in pos]
-            ).astype(np.int32)
-            idx = rows - CHAR_BASE
-            idx = np.where((idx >= 1) & (idx < len(VOCAB)), idx, 0)
-            prob = np.where(idx > 0, np.float32(0.95), np.float32(0.05))
-            for p, (text, conf, cols, T) in zip(pos, ctc_collapse_batch(idx, prob, VOCAB)):
-                # index-parity blanking (text_recognition_adapter.rs:61-102)
-                if conf < cfg.rec_score_threshold:
-                    text = ""
-                out[int(p)] = (text, conf, cols, T)
-    return out
+    shapes = zip(pdf["crop"].to_numpy(), pdf["crop_h"].to_numpy(), pdf["crop_w"].to_numpy())
+    crops = [np.frombuffer(zlib.decompress(b), dtype=np.uint8).reshape(h, w) for b, h, w in shapes]
+    return recognize_crops(crops, cfg)
 
 
 def _rec_frame(pdf: pd.DataFrame, decoded: list[tuple]) -> pd.DataFrame:
@@ -235,16 +175,13 @@ def recognize_with_word_boxes(crops: DataFrame, cfg: ExtractConfig) -> DataFrame
                 continue
             decoded = _decode_crops(pdf, cfg)
             boxes = pdf[["x1", "y1", "x2", "y2"]].to_numpy(np.float32)
+            # ctc_word_boxes gives a blanked (empty) text no boxes
             word_boxes = [
-                # a blanked text gets no boxes: the unblanked decode's
-                # columns must not leak through
-                []
-                if conf < cfg.rec_score_threshold
-                else [
+                [
                     [float(v) for v in box]
                     for box in ctc_word_boxes(line_bbox, text, cols, T, float(wh), float(b))
                 ]
-                for (text, conf, cols, T), line_bbox, wh, b in zip(
+                for (text, _conf, cols, T), line_bbox, wh, b in zip(
                     decoded, boxes, pdf["wh_ratio"], pdf["bucket"]
                 )
             ]

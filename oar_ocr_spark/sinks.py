@@ -40,20 +40,20 @@ BOX_OUTLINE = 128
 def annotate_page(media_ref: str, cfg: ExtractConfig) -> tuple[bytes, int, int, int]:
     """One page → (annotated PNG bytes, width, height, n_boxes).
 
-    Detection runs on the preprocessed upright page (the same
-    preprocess_page_full + detect_page path the features/extraction
-    operators use); boxes are rotated back to the ORIGINAL image's
-    coordinate space and drawn as 1-px outlines on a copy of the
-    original — the reference's annotated-image semantics
-    (structure.rs:1072 + geometry.rs:848)."""
+    Boxes are the crops' boxes of the preprocessed upright page from
+    local_ref.detect_and_crop, the detection seam extraction uses (AABB
+    or, for text_type="rotated", the quads' AABBs); they are rotated
+    back to the ORIGINAL image's coordinate space and drawn as 1-px
+    outlines on a copy of the original — the reference's
+    annotated-image semantics (structure.rs:1072 + geometry.rs:848)."""
     from .fixtures.render import render_page
-    from .local_ref import detect_page, preprocess_page_full
+    from .local_ref import detect_and_crop, preprocess_page_full
     from .functions.png import encode_png
     from .operators.geometry import rotate_back_to_original
 
     img = render_page(media_ref)
     upright, _cls, rotation = preprocess_page_full(img, cfg)
-    boxes, _scores = detect_page(upright, cfg)
+    boxes = np.array([box for _crop, box in detect_and_crop(upright, cfg)], dtype=np.float32)
     if rotation is not None and len(boxes):
         angle, rw, rh = rotation
         boxes = rotate_back_to_original(boxes, angle, rw, rh)

@@ -10,7 +10,7 @@ import numpy as np
 
 from oar_ocr_spark.operators.ctc import (
     char_positions_to_word_boxes,
-    ctc_decode_batch,
+    ctc_collapse_batch,
     ctc_word_boxes,
     is_cjk,
     pred_reverse,
@@ -27,11 +27,20 @@ def logits_from_indices(indices, vocab_size=len(VOCAB), peak=10.0):
     return out
 
 
+def collapse_argmax(logits):
+    """The per-timestep top-1 of (B, T, V) scores, CTC-collapsed (the
+    vectors are tie-free, so first-max argmax equals the reference's
+    last-max, decode.rs:26-42)."""
+    idx = logits.argmax(axis=2)
+    prob = np.take_along_axis(logits, idx[:, :, None], axis=2)[:, :, 0]
+    return ctc_collapse_batch(idx, prob, VOCAB)
+
+
 def test_ctc_blank_and_dup_collapse():
     # raw: a a <b> a b b  → "aab" (dup collapsed, blank splits the a's)
     a, bch = VOCAB.index("a"), VOCAB.index("b")
     logits = logits_from_indices([a, a, 0, a, bch, bch])
-    [(text, conf, cols, seq_len)] = ctc_decode_batch(logits, VOCAB)
+    [(text, conf, cols, seq_len)] = collapse_argmax(logits)
     assert text == "aab"
     assert cols == [0, 3, 4]
     assert seq_len == 6
@@ -41,7 +50,7 @@ def test_ctc_blank_and_dup_collapse():
 def test_ctc_all_blank_means_empty_zero_conf():
     # decode.rs:623-627: empty → mean_conf 0.0
     logits = logits_from_indices([0, 0, 0])
-    [(text, conf, cols, _)] = ctc_decode_batch(logits, VOCAB)
+    [(text, conf, cols, _)] = collapse_argmax(logits)
     assert text == "" and conf == 0.0 and cols == []
 
 
@@ -51,7 +60,7 @@ def test_ctc_mean_confidence_over_kept_only():
     logits[0, 0, a] = 0.9
     logits[0, 1, 0] = 0.5  # blank, prob not counted
     logits[0, 2, b] = 0.7
-    [(text, conf, _, _)] = ctc_decode_batch(logits, VOCAB)
+    [(text, conf, _, _)] = collapse_argmax(logits)
     assert text == "ab"
     assert abs(conf - 0.8) < 1e-6
 

@@ -295,6 +295,24 @@ def test_python_stages_go_through_the_seam():
     assert found == _BATCH_KERNELS
 
 
+def test_one_recognizer():
+    # recognition decodes in local_ref.recognize_crops only: no stage
+    # grows a second model call or CTC collapse beside it
+    found = set()
+    for rel, tree in _package_modules():
+        for top in tree.body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                    if name in ("ctc_collapse_batch", "recognize_rows"):
+                        found.add((rel, getattr(top, "name", "<module>"), name))
+    assert found == {
+        ("local_ref.py", "recognize_crops", "ctc_collapse_batch"),
+        ("local_ref.py", "recognize_crops", "recognize_rows"),
+    }
+
+
 def test_one_partitioning_policy():
     # every spread goes through partitioning.spread; the only other
     # repartition is the crop pool, which perfbench finds by its

@@ -103,32 +103,37 @@ def test_rectifier_identity_on_flat_pages():
     assert np.array_equal(_rectify(img), img)
 
 
-def test_batch_size_validation_bounds():
-    # builder validation 1..=4096 (ocr.rs:93,419-430)
-    import pytest
+def test_recognize_crops_is_batching_invariant():
+    # each crop's result depends on that crop alone: one batch, one crop
+    # per call and a shuffled batch agree, also where the score
+    # threshold blanks every text
+    import random
 
-    from oar_ocr_spark.local_ref import ExtractConfig
-
-    with pytest.raises(ValueError, match="region_batch_size"):
-        ExtractConfig(region_batch_size=4097)
-    cfg = ExtractConfig(region_batch_size=4096)
-    assert cfg.region_batch_size == 4096
-
-
-def test_region_batch_chunking_is_result_invariant(spark):
-    from oar_ocr_spark.fixtures.corpus import generate_documents
-    from oar_ocr_spark.local_ref import ExtractConfig
-    from oar_ocr_spark.pipeline import extract_spans
-    from oar_ocr_spark.schemas import DOCUMENTS_SCHEMA
-
-    docs = generate_documents(8, seed=3)
-    df = spark.createDataFrame(
-        [(d["doc_id"], [tuple(s.values()) for s in d["spans"]]) for d in docs],
-        schema=DOCUMENTS_SCHEMA,
+    from oar_ocr_spark.fixtures.render import render_page
+    from oar_ocr_spark.local_ref import (
+        ExtractConfig,
+        detect_and_crop,
+        preprocess_page,
+        recognize_crop,
+        recognize_crops,
     )
-    def spans(cfg):
-        return {
-            r["doc_id"]: [(s["kind"], s["text"], s["order"]) for s in r["spans"]]
-            for r in extract_spans(spark, df, cfg).collect()
-        }
-    assert spans(ExtractConfig(region_batch_size=2)) == spans(ExtractConfig(region_batch_size=4096))
+
+    for cfg, refs in [
+        (ExtractConfig(), [f"{i}_m{i % 3}" for i in range(12)]),
+        (ExtractConfig(text_type="rotated"), [f"rot:{i}_m0" for i in range(6)]),
+        (ExtractConfig(rec_score_threshold=0.99), [f"{i}_m1" for i in range(6)]),
+    ]:
+        crops = [
+            crop
+            for ref in refs
+            for crop, _box in detect_and_crop(preprocess_page(render_page(ref), cfg)[0], cfg)
+        ]
+        batch = recognize_crops(crops, cfg)
+        assert len(batch) == len(crops) > len(refs)
+        assert len({t[3] for t in batch}) > 1  # several buckets in one batch
+        assert [recognize_crops([c], cfg)[0] for c in crops] == batch
+        assert [recognize_crop(c, cfg) for c in crops] == [t[:2] for t in batch]
+        perm = list(range(len(crops)))
+        random.Random(5).shuffle(perm)
+        shuffled = recognize_crops([crops[p] for p in perm], cfg)
+        assert {p: r for p, r in zip(perm, shuffled)} == dict(enumerate(batch))

@@ -2,13 +2,14 @@
 resize_detection.rs:243-320 and resize_recognition.rs:84-130."""
 
 import numpy as np
+import pytest
 
 from oar_ocr_spark.models.synthetic import BG
 from oar_ocr_spark.operators.resize import (
     detection_target_dims,
     nn_resize,
+    recognition_row,
     resize_for_detection,
-    resize_for_recognition,
 )
 
 
@@ -63,14 +64,33 @@ def test_resize_for_detection_ratios():
 
 def test_recognition_resize_pad_right():
     crop = np.zeros((20, 40), dtype=np.uint8)  # ratio 2.0
-    out = resize_for_recognition(crop, target_h=48, max_wh_ratio=4.0)
-    assert out.shape == (48, 192)
+    out = recognition_row(crop, target_h=48, bucket=4)
+    assert out.shape == (192,)
     # content occupies left ceil(48*2)=96 cols; the rest is background pad
-    assert (out[:, 96:] == BG).all() or (out[:, 96:] == 255).all()
-    assert (out[:, :96] == 0).all()
+    assert (out[96:] == BG).all()
+    assert (out[:96] == 0).all()
 
 
 def test_recognition_resize_caps_width():
     crop = np.zeros((10, 10000), dtype=np.uint8)
-    out = resize_for_recognition(crop, target_h=48, max_wh_ratio=1000.0, max_img_w=3200)
-    assert out.shape == (48, 3200)
+    out = recognition_row(crop, target_h=48, bucket=1000, max_img_w=3200)
+    assert out.shape == (3200,)
+    assert (out == 0).all()  # squeezed to the full width, no pad
+
+
+@pytest.mark.parametrize(
+    "h, w", [(1, 1), (7, 3), (20, 40), (33, 150), (48, 48), (49, 120), (90, 31), (96, 200), (13, 400)]
+)
+@pytest.mark.parametrize("bucket", [1, 2, 4, 7, 32])
+def test_recognition_row_is_the_padded_centre_row_of_nn_resize(h, w, bucket):
+    # the closed form equals resizing the whole crop with nn_resize to
+    # (48, resize_w), padding right to the bucket width and reading row 24
+    crop = np.random.default_rng(h * 1000 + w).integers(0, 255, (h, w), dtype=np.uint8)
+    batch_w = min(int(np.ceil(48 * bucket)), 3200)
+    resize_w = max(min(int(np.ceil(48 * w / h)), batch_w), 1)
+    full = np.full((48, batch_w), BG, dtype=np.uint8)
+    full[:, :resize_w] = nn_resize(crop, 48, resize_w)
+    np.testing.assert_array_equal(recognition_row(crop, 48, bucket), full[24])
+    flipped = crop[::-1, ::-1]  # line orientation hands the kernel a view
+    full[:, :resize_w] = nn_resize(flipped, 48, resize_w)
+    np.testing.assert_array_equal(recognition_row(flipped, 48, bucket), full[24])

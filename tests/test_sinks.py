@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from oar_ocr_spark.fixtures.corpus import generate_documents
 from oar_ocr_spark.fixtures.render import render_page
 from oar_ocr_spark.functions.png import decode_png
-from oar_ocr_spark.local_ref import ExtractConfig, detect_page, preprocess_page_full
+from oar_ocr_spark.local_ref import ExtractConfig, detect_and_crop, preprocess_page_full
 from oar_ocr_spark.operators.geometry import rotate_back_to_original
 from oar_ocr_spark.pipeline import extract_spans
 from oar_ocr_spark.schemas import DOCUMENTS_SCHEMA
@@ -18,8 +18,12 @@ from oar_ocr_spark.sinks import BOX_OUTLINE, annotate_page, save_results
 
 
 def test_annotate_page_draws_backmapped_outlines():
-    cfg = ExtractConfig()
-    for ref in ["40_m0", "7_m1", "123_m2"]:
+    # rotated configs detect quads: the boxes are their AABBs, the same
+    # detect_and_crop boxes extraction recognizes
+    pages = [(ExtractConfig(), ref) for ref in ["40_m0", "7_m1", "123_m2"]]
+    rotated = ExtractConfig(text_type="rotated")
+    pages += [(rotated, f"rot:{i}_m0") for i in range(20)]
+    for cfg, ref in pages:
         png, w, h, n = annotate_page(ref, cfg)
         img = render_page(ref)
         assert (w, h) == (img.shape[1], img.shape[0])
@@ -27,19 +31,18 @@ def test_annotate_page_draws_backmapped_outlines():
         # original pixels never use the outline intensity
         assert not (img == BOX_OUTLINE).any()
         upright, _cls, rotation = preprocess_page_full(img, cfg)
-        boxes, _ = detect_page(upright, cfg)
-        assert n == len(boxes)
-        if rotation is not None and len(boxes):
+        boxes = np.array([box for _crop, box in detect_and_crop(upright, cfg)], dtype=np.float32)
+        assert n == len(boxes) > 0
+        if rotation is not None:
             boxes = rotate_back_to_original(boxes, *rotation)
         # every box's top edge is drawn at its back-mapped position
-        for b in np.asarray(boxes).reshape(-1, 4):
+        for b in boxes:
             x1, y1 = max(int(np.floor(b[0])), 0), max(int(np.floor(b[1])), 0)
             x2 = min(int(np.ceil(b[2])), annotated.shape[1])
             assert (annotated[min(y1, annotated.shape[0] - 1), x1:x2] == BOX_OUTLINE).all()
         # outside-of-outline pixels are untouched
         mask = annotated == BOX_OUTLINE
         assert (annotated[~mask] == img[~mask]).all()
-        assert n > 0 or len(boxes) == 0
 
 
 def test_save_results_writes_all_artifacts(spark, tmp_path):

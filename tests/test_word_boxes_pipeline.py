@@ -52,25 +52,17 @@ def test_word_boxes_blanked_with_text(spark):
 
 
 def _reference(row, cfg):
-    """One crop decoded on its own: the single-row CTC collapse plus
-    ctc_word_boxes, with the stage's score-threshold blanking."""
+    """One crop recognized on its own by the kernel, plus
+    ctc_word_boxes, which gives a blanked text no boxes."""
     import zlib
 
-    from oar_ocr_spark.models.synthetic import CHAR_BASE, VOCAB, classify_line_orientation
-    from oar_ocr_spark.operators.ctc import ctc_collapse_batch, ctc_word_boxes
-    from oar_ocr_spark.pipeline import _decode_row_for_crop
+    from oar_ocr_spark.local_ref import recognize_crops
+    from oar_ocr_spark.operators.ctc import ctc_word_boxes
 
     crop = np.frombuffer(zlib.decompress(row["crop"]), dtype=np.uint8).reshape(
         row["crop_h"], row["crop_w"]
     )
-    if cfg.use_line_orientation and classify_line_orientation(crop) == 1:
-        crop = crop[::-1, ::-1]
-    idx = _decode_row_for_crop(crop, cfg.rec_target_h, row["bucket"]).astype(np.int32) - CHAR_BASE
-    idx = np.where((idx >= 1) & (idx < len(VOCAB)), idx, 0)
-    prob = np.where(idx > 0, np.float32(0.95), np.float32(0.05))
-    [(text, conf, cols, T)] = ctc_collapse_batch(idx[None, :], prob[None, :], VOCAB)
-    if conf < cfg.rec_score_threshold:
-        return "", np.float32(conf), []
+    [(text, conf, cols, T)] = recognize_crops([crop], cfg)
     bbox = np.asarray([row["x1"], row["y1"], row["x2"], row["y2"]], dtype=np.float32)
     wb = ctc_word_boxes(bbox, text, cols, T, float(row["wh_ratio"]), float(row["bucket"]))
     return text, np.float32(conf), np.asarray(wb, dtype=np.float32).tolist()
